@@ -15,6 +15,23 @@ from pathlib import Path
 from pyspark.sql import SparkSession
 
 
+#: Runtime SQL settings this package pins on every session it runs queries
+#: in, whether ``get_spark`` built it or the caller handed it over
+#: (``configure_session``). UTC timestamps keep results comparable with the
+#: DuckDB oracle; AQE sets plan quality; ``nanosAsLong`` lets the parquet
+#: reader accept events files that encode ``ts`` as INT64 TIMESTAMP(NANOS)
+#: (``sources/tables.normalize_event_ts`` converts the longs). The reader
+#: consults it when a lazy events frame runs its action, not when the frame
+#: is built, so the session is its one owner — no engine code sets it.
+RUNTIME_CONF: dict[str, str] = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+
 def default_cpus() -> int:
     env = os.environ.get("SPARK_GRAFT_CPUS")
     if env:
@@ -42,16 +59,12 @@ def get_spark(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**RUNTIME_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -94,13 +107,9 @@ def configure_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable defaults to an externally provided session.
 
     The driver hands ``entry(spark)`` / ``queries()[name](spark, sf_dir)`` a
-    session we did not build; pin the settings that affect result comparison
-    (UTC timestamps for the DuckDB oracle) and plan quality (AQE).
+    session we did not build; pin :data:`RUNTIME_CONF` on it.
     """
-    conf = spark.conf
-    conf.set("spark.sql.session.timeZone", "UTC")
-    conf.set("spark.sql.adaptive.enabled", "true")
-    conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+    for k, v in RUNTIME_CONF.items():
+        spark.conf.set(k, v)
     ship_package(spark)
     return spark

@@ -137,19 +137,6 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Load the events table, normalizing ``ts`` to TIMESTAMP via
     :func:`normalize_event_ts` (the testdata's physical encoding has varied
-    across driver rounds: INT64 nanos, then naive micros)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, "events"))
-    return normalize_event_ts(df)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register each table as a temp view so ``spark.sql`` can address it."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
+    across driver rounds: INT64 nanos, then naive micros). INT64 nanos read
+    as longs because the session pins ``nanosAsLong`` (session.py)."""
+    return normalize_event_ts(spark.read.parquet(table_path(sf_dir, "events")))

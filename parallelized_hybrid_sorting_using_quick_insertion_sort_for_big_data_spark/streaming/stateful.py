@@ -17,25 +17,24 @@ production deployment sets a TTL timeout for key churn.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import uuid
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .sink import run_stream, stage_chunks
 
 # value doubles carry <= 2 decimals in the events table; scale to integer
 # hundredths so cross-batch accumulation is exact in int64
 _SCALE = 100
 
 
-def _stateful_shuffle_partitions(n_rows: int) -> int:
+def _stateful_shuffle_partitions(spark: SparkSession, events_file: str) -> int:
     """Size the streaming shuffle for PER-KEY PYTHON state work (VERDICT
     r12 item 4). The applyInPandasWithState operators pay a per-group
     Python call (slice + state round-trip, ~ms each) for every key in
@@ -46,7 +45,8 @@ def _stateful_shuffle_partitions(n_rows: int) -> int:
     trigger are the overhead there); larger inputs take 32, the local
     core count — a production job sizes this to key cardinality ÷ target
     calls-per-task, same rule."""
-    return 8 if n_rows <= 250_000 else 32
+    return 8 if spark.read.parquet(events_file).count() <= 250_000 else 32
+
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -119,7 +119,7 @@ def user_profile_batch(events: DataFrame) -> DataFrame:
 
 def run_user_profile_stream(
     spark: SparkSession,
-    events_parquet: str,
+    events_file: str,
     n_chunks: int = 3,
 ) -> DataFrame:
     """Execute the stateful operator as a REAL multi-micro-batch streaming
@@ -130,35 +130,13 @@ def run_user_profile_stream(
     return the FINAL state per user as a distributed reduction over the
     sink files. The staged source and checkpoint are removed once the
     stream stops."""
-    from .sink import drain_stream_to_parquet, read_sink, stream_shuffle_partitions
-
-    name = f"phsqis_state_{uuid.uuid4().hex[:8]}"
-    stage_dir = os.path.join(tempfile.gettempdir(), name + "_src")
-    os.makedirs(stage_dir, exist_ok=True)
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = spark.read.parquet(events_parquet)
-    # split deterministically into n_chunks files to force several triggers
-    src.withColumn("__c", F.pmod(F.col("event_id"), F.lit(n_chunks))).repartition(
-        n_chunks, "__c"
-    ).drop("__c").write.mode("overwrite").parquet(stage_dir)
-
-    from ..sources.tables import normalize_event_ts
-
-    events = normalize_event_ts(
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir)
+    updates, _ = run_stream(
+        spark,
+        events_file,
+        user_profile_stream,
+        stage=stage_chunks(n_chunks),
+        shuffle_partitions=_stateful_shuffle_partitions(spark, events_file),
     )
-
-    out = user_profile_stream(events)
-    try:
-        with stream_shuffle_partitions(spark, _stateful_shuffle_partitions(src.count())):
-            out_dir = drain_stream_to_parquet(out, name, output_mode="update")
-    finally:
-        shutil.rmtree(stage_dir, ignore_errors=True)
-
-    updates = read_sink(spark, out_dir, OUTPUT_SCHEMA)
     # final state per user = the update with the highest n_events (monotone)
     w_last = F.struct("n_events", "total_value_c", "last_seen_us")
     return (
@@ -328,7 +306,7 @@ def attribution_stream(events: DataFrame) -> DataFrame:
 
 def run_attribution_stream(
     spark: SparkSession,
-    events_parquet: str,
+    events_file: str,
     n_chunks: int = 3,
 ) -> DataFrame:
     """Execute streaming attribution as a real multi-micro-batch job over a
@@ -337,37 +315,13 @@ def run_attribution_stream(
     order, and the drained sink holds one row per purchase. The staging
     ntile is a replay-harness artifact (test scale); a production source
     is already time-ordered per key."""
-    from pyspark.sql import Window
-
-    from .sink import drain_stream_to_parquet, read_sink, stream_shuffle_partitions
-
-    name = f"phsqis_attr_{uuid.uuid4().hex[:8]}"
-    stage_dir = os.path.join(tempfile.gettempdir(), name + "_src")
-    os.makedirs(stage_dir, exist_ok=True)
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = spark.read.parquet(events_parquet)
-    w = Window.orderBy("ts", "event_id")
-    staged = src.withColumn("__c", F.ntile(n_chunks).over(w))
-    for c in range(1, n_chunks + 1):
-        staged.where(F.col("__c") == c).drop("__c").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(stage_dir, f"chunk={c:03d}"))
-
-    from ..sources.tables import normalize_event_ts
-
-    events = normalize_event_ts(
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(stage_dir)
-    )
-
-    out = attribution_stream(events)
-    try:
-        with stream_shuffle_partitions(spark, _stateful_shuffle_partitions(src.count())):
-            out_dir = drain_stream_to_parquet(out, name, output_mode="append")
-    finally:
-        shutil.rmtree(stage_dir, ignore_errors=True)
-
-    return read_sink(spark, out_dir, ATTR_OUTPUT_SCHEMA)
+    return run_stream(
+        spark,
+        events_file,
+        attribution_stream,
+        stage=stage_chunks(
+            n_chunks, F.ntile(n_chunks).over(Window.orderBy("ts", "event_id")) - 1
+        ),
+        output_mode="append",
+        shuffle_partitions=_stateful_shuffle_partitions(spark, events_file),
+    )[0]

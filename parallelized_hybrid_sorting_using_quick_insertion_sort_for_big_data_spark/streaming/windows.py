@@ -13,15 +13,11 @@ are partial-agg friendly (count/sum); session windows use Spark's native
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import normalize_event_ts
+from .sink import run_stream, stage_chunks, stage_copies
 
 _DEC = "decimal(27,8)"
 
@@ -72,62 +68,31 @@ def sessionize(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
 
 def stream_tumbling_agg(
     spark: SparkSession,
-    source_dir: str,
-    schema,
+    events_file: str,
     window: str = "1 hour",
     watermark: str = "2 hours",
 ) -> DataFrame:
     """Run the tumbling aggregation as a real Structured Streaming job over
-    a parquet directory source with an event-time watermark, drain it
-    through ``foreachBatch`` → parquet (complete mode: each trigger
-    overwrites with the full result, written executor-side — never a
-    driver-resident memory sink), and return the final materialized result.
+    a replay of the events file with an event-time watermark, drained in
+    complete mode (each trigger overwrites the sink with the full result),
+    and return the final materialized result.
 
     The watermark bounds state: windows older than (max event time -
     watermark) are finalized and evicted — the late-data contract a
     continuous pipeline needs. With a static source, processAllAvailable
     drains everything, so the result equals the batch aggregation (asserted
     in tests)."""
-    from .sink import drain_stream_to_parquet, read_sink, stream_shuffle_partitions
-
-    name = f"phsqis_stream_{uuid.uuid4().hex[:8]}"
-    staged = None
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if os.path.isfile(source_dir):
-        # the file-stream source only accepts directories: stage the single
-        # parquet file into a scratch dir (test-scale convenience; a real
-        # deployment streams from a directory/Kafka anyway)
-        staged = os.path.join(tempfile.gettempdir(), name + "_src")
-        os.makedirs(staged, exist_ok=True)
-        shutil.copy(source_dir, os.path.join(staged, os.path.basename(source_dir)))
-        source_dir = staged
-    events = normalize_event_ts(spark.readStream.schema(schema).parquet(source_dir))
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(_DEC)).cast("double").alias("total_value"),
-        )
-        .select(
-            F.col("win.start").alias("win_start"), "event_type", "n_events", "total_value"
-        )
-    )
-    try:
-        with stream_shuffle_partitions(spark):
-            out_dir = drain_stream_to_parquet(
-                agg, name, output_mode="complete", overwrite_each_batch=True
-            )
-    finally:
-        if staged is not None:
-            shutil.rmtree(staged, ignore_errors=True)
-    return read_sink(spark, out_dir, agg.schema)
+    return run_stream(
+        spark,
+        events_file,
+        lambda events: tumbling_agg(events.withWatermark("ts", watermark), window),
+        output_mode="complete",
+    )[0]
 
 
 def stream_sessionize(
     spark: SparkSession,
-    source_dir: str,
-    schema,
+    events_file: str,
     gap: str = "30 minutes",
     watermark: str = "2 hours",
 ) -> DataFrame:
@@ -138,45 +103,20 @@ def stream_sessionize(
     State shape at scale: the store holds OPEN sessions per user — sessions
     whose latest event is within the watermark horizon; a session closes
     (and its state is evicted) once the watermark passes its end. Complete
-    mode + overwrite-per-batch drains the full result for oracle parity
-    with the batch form (a production job runs append mode and emits each
-    session exactly once, on close)."""
-    from .sink import drain_stream_to_parquet, read_sink, stream_shuffle_partitions
-
-    name = f"phsqis_ssess_{uuid.uuid4().hex[:8]}"
-    staged = None
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if os.path.isfile(source_dir):
-        staged = os.path.join(tempfile.gettempdir(), name + "_src")
-        os.makedirs(staged, exist_ok=True)
-        shutil.copy(source_dir, os.path.join(staged, os.path.basename(source_dir)))
-        source_dir = staged
-    events = normalize_event_ts(spark.readStream.schema(schema).parquet(source_dir))
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("win"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_micros(F.col("win.start")).alias("session_start_us"),
-            F.unix_micros(F.col("win.end")).alias("session_end_us"),
-            "n_events",
-        )
-    )
-    try:
-        with stream_shuffle_partitions(spark):
-            out_dir = drain_stream_to_parquet(
-                agg, name, output_mode="complete", overwrite_each_batch=True
-            )
-    finally:
-        if staged is not None:
-            shutil.rmtree(staged, ignore_errors=True)
-    return read_sink(spark, out_dir, agg.schema)
+    mode drains the full result for oracle parity with the batch form (a
+    production job runs append mode and emits each session exactly once, on
+    close)."""
+    return run_stream(
+        spark,
+        events_file,
+        lambda events: sessionize(events.withWatermark("ts", watermark), gap),
+        output_mode="complete",
+    )[0]
 
 
 def stream_late_drop(
     spark: SparkSession,
-    source_file: str,
+    events_file: str,
     window: str = "1 hour",
     watermark: str = "2 hours",
     n_chunks: int = 3,
@@ -206,83 +146,31 @@ def stream_late_drop(
     into the very windows it finalizes at its own end), and the drop
     counter measures rows after the map-side partial aggregate, i.e.
     distinct late windows per batch here (each chunk is one file, read as
-    one partition via the coalesce(1) below — keep it, the oracle's
+    one partition — the ``stage_chunks`` staging guarantees it, and the oracle's
     accounting depends on it).
 
     Scale shape: identical to ``stream_tumbling_agg`` (bounded state,
     partial-agg counts); the drop accounting is driver-side metadata from
     StreamingQueryProgress, not a data collect."""
-    from .sink import read_sink, stream_shuffle_partitions
 
-    name = f"phsqis_slate_{uuid.uuid4().hex[:8]}"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    staged = os.path.join(tempfile.gettempdir(), name + "_src")
-    os.makedirs(staged, exist_ok=True)
-    src = spark.read.parquet(source_file)
-    # one file per chunk, ascending mtimes so FileStreamSource triggers
-    # them in chunk order (same device as stream_dedup's replay copies)
-    for i in range(n_chunks):
-        tmp_i = os.path.join(tempfile.gettempdir(), f"{name}_c{i}")
-        src.where(F.pmod(F.col("event_id"), F.lit(n_chunks)) == i).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp_i)
-        part = next(
-            f for f in sorted(os.listdir(tmp_i)) if f.endswith(".parquet")
+    def build(events: DataFrame) -> DataFrame:
+        return (
+            events.withWatermark("ts", watermark)
+            .groupBy(F.window("ts", window).alias("win"))
+            .agg(F.count(F.lit(1)).alias("n_events"))
+            .select(F.unix_micros(F.col("win.start")).alias("win_start_us"), "n_events")
         )
-        dst = os.path.join(staged, f"chunk_{i}.parquet")
-        shutil.copy(os.path.join(tmp_i, part), dst)
-        os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-        shutil.rmtree(tmp_i, ignore_errors=True)
 
-    events = normalize_event_ts(
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
+    sink, progress = run_stream(
+        spark,
+        events_file,
+        build,
+        stage=stage_chunks(n_chunks),
+        output_mode="append",
     )
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.unix_micros(F.col("win.start")).alias("win_start_us"), "n_events")
+    dropped = sum(
+        op.numRowsDroppedByWatermark for p in progress for op in p.stateOperators
     )
-
-    out_dir = os.path.join(tempfile.gettempdir(), name + "_out")
-    os.makedirs(out_dir, exist_ok=True)
-    checkpoint = os.path.join(tempfile.gettempdir(), name + "_ckpt")
-
-    def _write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-
-    dropped = 0
-    try:
-        with stream_shuffle_partitions(spark):
-            q = (
-                agg.writeStream.outputMode("append")
-                .foreachBatch(_write_batch)
-                .option("checkpointLocation", checkpoint)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-                for p in q.recentProgress:
-                    ops = (
-                        p.get("stateOperators", [])
-                        if isinstance(p, dict)
-                        else p.stateOperators
-                    )
-                    for op in ops:
-                        dropped += int(
-                            op.get("numRowsDroppedByWatermark", 0)
-                            if isinstance(op, dict)
-                            else op.numRowsDroppedByWatermark
-                        )
-            finally:
-                q.stop()
-    finally:
-        shutil.rmtree(checkpoint, ignore_errors=True)
-        shutil.rmtree(staged, ignore_errors=True)
-
-    sink = read_sink(spark, out_dir, agg.schema)
     return sink.agg(
         F.count(F.lit(1)).cast("bigint").alias("emitted_windows"),
         F.coalesce(F.sum("n_events"), F.lit(0)).cast("bigint").alias("emitted_events"),
@@ -291,8 +179,7 @@ def stream_late_drop(
 
 def stream_static_enrich(
     spark: SparkSession,
-    source_dir: str,
-    schema,
+    events_file: str,
     dim: DataFrame,
     window: str = "1 hour",
     watermark: str = "2 hours",
@@ -307,53 +194,36 @@ def stream_static_enrich(
     stream-side shuffle before the aggregation. State is only held for the
     windowed agg (bounded by the watermark horizon); the join itself is
     stateless — the scale contract that makes dimension enrichment safe on
-    an unbounded stream. Drained via foreachBatch → parquet (complete
-    mode), never a driver-resident sink."""
-    from .sink import drain_stream_to_parquet, read_sink, stream_shuffle_partitions
+    an unbounded stream. Drained in complete mode, never a driver-resident
+    sink."""
 
-    name = f"phsqis_senrich_{uuid.uuid4().hex[:8]}"
-    staged = None
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if os.path.isfile(source_dir):
-        staged = os.path.join(tempfile.gettempdir(), name + "_src")
-        os.makedirs(staged, exist_ok=True)
-        shutil.copy(source_dir, os.path.join(staged, os.path.basename(source_dir)))
-        source_dir = staged
-    events = normalize_event_ts(spark.readStream.schema(schema).parquet(source_dir))
-    enriched = events.join(F.broadcast(dim), "user_id")
-    agg = (
-        enriched.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "segment")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(_DEC)).cast("double").alias("total_value"),
-        )
-        .select(F.col("win.start").alias("win_start"), "segment", "n_events", "total_value")
-    )
-    try:
-        with stream_shuffle_partitions(spark):
-            out_dir = drain_stream_to_parquet(
-                agg, name, output_mode="complete", overwrite_each_batch=True
+    def build(events: DataFrame) -> DataFrame:
+        return (
+            events.join(F.broadcast(dim), "user_id")
+            .withWatermark("ts", watermark)
+            .groupBy(F.window("ts", window).alias("win"), "segment")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum(F.col("value").cast(_DEC)).cast("double").alias("total_value"),
             )
-    finally:
-        if staged is not None:
-            shutil.rmtree(staged, ignore_errors=True)
-    return read_sink(spark, out_dir, agg.schema)
+            .select(F.col("win.start").alias("win_start"), "segment", "n_events", "total_value")
+        )
+
+    return run_stream(spark, events_file, build, output_mode="complete")[0]
 
 
 def stream_stream_join(
     spark: SparkSession,
-    source_file: str,
-    schema,
+    events_file: str,
     left_type: str = "purchase",
     right_type: str = "click",
     tolerance: str = "10 minutes",
     watermark: str = "2 hours",
 ) -> DataFrame:
     """Stream–stream inner join: two watermarked streaming relations (two
-    independent readers over the replay) joined on user_id with a bounded
-    event-time constraint — right events in the ``tolerance`` window at or
-    before each left event.
+    sides of the replay, each its own file source) joined on user_id with
+    a bounded event-time constraint — right events in the ``tolerance``
+    window at or before each left event.
 
     This is the join shape with state on BOTH sides: each side buffers rows
     until the other side's watermark plus the time bound proves no further
@@ -362,18 +232,10 @@ def stream_stream_join(
     the time constraint in the join condition for cleanup. Without the
     bound the buffers grow forever on an unbounded stream. Append mode:
     each matched pair is emitted exactly once."""
-    from .sink import drain_stream_to_parquet, read_sink, stream_shuffle_partitions
 
-    name = f"phsqis_ssjoin_{uuid.uuid4().hex[:8]}"
-    staged = os.path.join(tempfile.gettempdir(), name + "_src")
-    os.makedirs(staged, exist_ok=True)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    shutil.copy(source_file, os.path.join(staged, os.path.basename(source_file)))
-
-    def side(event_type: str, prefix: str):
+    def side(events: DataFrame, event_type: str, prefix: str) -> DataFrame:
         return (
-            normalize_event_ts(spark.readStream.schema(schema).parquet(staged))
-            .where(F.col("event_type") == event_type)
+            events.where(F.col("event_type") == event_type)
             .select(
                 F.col("event_id").alias(f"{prefix}_event_id"),
                 F.col("user_id").alias(f"{prefix}_user_id"),
@@ -382,31 +244,27 @@ def stream_stream_join(
             .withWatermark(f"{prefix}_ts", watermark)
         )
 
-    left = side(left_type, "l")
-    right = side(right_type, "r")
-    joined = left.join(
-        right,
-        (F.col("l_user_id") == F.col("r_user_id"))
-        & (F.col("r_ts") >= F.col("l_ts") - F.expr(f"interval {tolerance}"))
-        & (F.col("r_ts") <= F.col("l_ts")),
-    ).select(
-        F.col("l_event_id").alias("purchase_id"),
-        F.col("r_event_id").alias("click_id"),
-        F.col("l_user_id").alias("user_id"),
-        (F.unix_micros("l_ts") - F.unix_micros("r_ts")).alias("delta_us"),
-    )
-    try:
-        with stream_shuffle_partitions(spark):
-            out_dir = drain_stream_to_parquet(joined, name, output_mode="append")
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
-    return read_sink(spark, out_dir, joined.schema)
+    def build(events: DataFrame) -> DataFrame:
+        left = side(events, left_type, "l")
+        right = side(events, right_type, "r")
+        return left.join(
+            right,
+            (F.col("l_user_id") == F.col("r_user_id"))
+            & (F.col("r_ts") >= F.col("l_ts") - F.expr(f"interval {tolerance}"))
+            & (F.col("r_ts") <= F.col("l_ts")),
+        ).select(
+            F.col("l_event_id").alias("purchase_id"),
+            F.col("r_event_id").alias("click_id"),
+            F.col("l_user_id").alias("user_id"),
+            (F.unix_micros("l_ts") - F.unix_micros("r_ts")).alias("delta_us"),
+        )
+
+    return run_stream(spark, events_file, build, output_mode="append")[0]
 
 
 def stream_dedup(
     spark: SparkSession,
-    source_file: str,
-    schema,
+    events_file: str,
     key_cols: list[str] | None = None,
     watermark: str = "2 hours",
     copies: int = 2,
@@ -422,41 +280,27 @@ def stream_dedup(
     horizon (evicted after), the contract that makes exactly-once event
     ingestion feasible on an unbounded stream — a plain
     ``dropDuplicates(key)`` would grow state forever. Deduped rows are
-    drained executor-side (append mode, foreachBatch → parquet); callers
-    aggregate the returned frame distributed. Rows older than the watermark
-    in later copies are dropped as late data — for exact replays (this
-    demo) that coincides with dedup; a production source with genuinely
-    late NON-duplicate data needs the watermark sized to its lateness
-    bound."""
-    from .sink import drain_stream_to_parquet, read_sink, stream_shuffle_partitions
-
+    drained executor-side (append mode); callers aggregate the returned
+    frame distributed. Rows older than the watermark in later copies are
+    dropped as late data — for exact replays (this demo) that coincides
+    with dedup; a production source with genuinely late NON-duplicate data
+    needs the watermark sized to its lateness bound."""
     key_cols = key_cols or ["event_id"]
-    name = f"phsqis_sdedup_{uuid.uuid4().hex[:8]}"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    staged = os.path.join(tempfile.gettempdir(), name + "_src")
-    os.makedirs(staged, exist_ok=True)
-    for i in range(copies):
-        shutil.copy(source_file, os.path.join(staged, f"copy{i}.parquet"))
-    events = normalize_event_ts(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    deduped = events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(key_cols)
-    try:
-        with stream_shuffle_partitions(spark):
-            out_dir = drain_stream_to_parquet(deduped, name, output_mode="append")
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
-    return read_sink(spark, out_dir, deduped.schema)
+    return run_stream(
+        spark,
+        events_file,
+        lambda events: events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+            key_cols
+        ),
+        stage=stage_copies(copies),
+        output_mode="append",
+    )[0]
 
 
 def stream_windowed_cms(
     spark: SparkSession,
-    source_dir: str,
-    schema,
+    events_file: str,
     window: str = "6 hours",
-    window_s: int = 21600,
     watermark: str = "2 hours",
     value_col: str = "user_id",
     depth: int = 4,
@@ -477,61 +321,44 @@ def stream_windowed_cms(
     cell — identical to the batch ``cms_build`` per window, which is what
     the generated DuckDB oracle recomputes cell-for-cell."""
     from ..operators.sketch import _cell_of, _digest
-    from .sink import drain_stream_to_parquet, read_sink, stream_shuffle_partitions
 
-    name = f"phsqis_scms_{uuid.uuid4().hex[:8]}"
-    staged = None
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if os.path.isfile(source_dir):
-        staged = os.path.join(tempfile.gettempdir(), name + "_src")
-        os.makedirs(staged, exist_ok=True)
-        shutil.copy(source_dir, os.path.join(staged, os.path.basename(source_dir)))
-        source_dir = staged
-    events = normalize_event_ts(spark.readStream.schema(schema).parquet(source_dir))
-    v = F.col(value_col)
-    n_blocks = (depth + 3) // 4
-    digests = events.where(v.isNotNull()).select(
-        "ts", *[_digest(v, b).alias(f"__d{b}") for b in range(n_blocks)]
-    )
-    fanned = digests.select(
-        "ts",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        _cell_of(F.col(f"__d{j // 4}"), j, width).alias("cell"),
-                    )
-                    for j in range(depth)
-                ]
-            )
-        ).alias("__c"),
-    )
-    agg = (
-        fanned.withWatermark("ts", watermark)
-        .groupBy(
-            F.window("ts", window).alias("win"),
-            F.col("__c.j").alias("j"),
-            F.col("__c.cell").alias("cell"),
+    def build(events: DataFrame) -> DataFrame:
+        v = F.col(value_col)
+        n_blocks = (depth + 3) // 4
+        digests = events.where(v.isNotNull()).select(
+            "ts", *[_digest(v, b).alias(f"__d{b}") for b in range(n_blocks)]
         )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("win.start").alias("win_start"), "j", "cell", "n")
-    )
-    try:
-        with stream_shuffle_partitions(spark):
-            out_dir = drain_stream_to_parquet(
-                agg, name, output_mode="complete", overwrite_each_batch=True
+        fanned = digests.select(
+            "ts",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(j).alias("j"),
+                            _cell_of(F.col(f"__d{j // 4}"), j, width).alias("cell"),
+                        )
+                        for j in range(depth)
+                    ]
+                )
+            ).alias("__c"),
+        )
+        return (
+            fanned.withWatermark("ts", watermark)
+            .groupBy(
+                F.window("ts", window).alias("win"),
+                F.col("__c.j").alias("j"),
+                F.col("__c.cell").alias("cell"),
             )
-    finally:
-        if staged is not None:
-            shutil.rmtree(staged, ignore_errors=True)
-    return read_sink(spark, out_dir, agg.schema)
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select(F.col("win.start").alias("win_start"), "j", "cell", "n")
+        )
+
+    return run_stream(spark, events_file, build, output_mode="complete")[0]
 
 
 def stream_scd2_enrich(
     spark: SparkSession,
-    source_dir: str,
-    schema,
+    events_file: str,
     dim: DataFrame,
     key: str = "user_id",
 ) -> DataFrame:
@@ -548,43 +375,26 @@ def stream_scd2_enrich(
 
     Dim contract: (key, segment, valid_from_us, valid_to_us) with
     half-open [from, to) validity — the scd.py convention."""
-    from .sink import drain_stream_to_parquet, read_sink, stream_shuffle_partitions
 
-    name = f"phsqis_scd2e_{uuid.uuid4().hex[:8]}"
-    staged = None
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if os.path.isfile(source_dir):
-        staged = os.path.join(tempfile.gettempdir(), name + "_src")
-        os.makedirs(staged, exist_ok=True)
-        shutil.copy(source_dir, os.path.join(staged, os.path.basename(source_dir)))
-        source_dir = staged
-    events = normalize_event_ts(
-        spark.readStream.schema(schema).parquet(source_dir)
-    ).withColumn("__ts_us", F.unix_micros(F.col("ts")))
-    cond = (
-        (events[key] == dim[key])
-        & (events["__ts_us"] >= dim["valid_from_us"])
-        & (events["__ts_us"] < dim["valid_to_us"])
-    )
-    enriched = events.join(F.broadcast(dim), cond).drop(dim[key])
-    agg = enriched.groupBy("segment").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast(_DEC)).cast("double").alias("total_value"),
-    )
-    try:
-        with stream_shuffle_partitions(spark):
-            out_dir = drain_stream_to_parquet(
-                agg, name, output_mode="complete", overwrite_each_batch=True
-            )
-    finally:
-        if staged is not None:
-            shutil.rmtree(staged, ignore_errors=True)
-    return read_sink(spark, out_dir, agg.schema)
+    def build(events: DataFrame) -> DataFrame:
+        events = events.withColumn("__ts_us", F.unix_micros(F.col("ts")))
+        cond = (
+            (events[key] == dim[key])
+            & (events["__ts_us"] >= dim["valid_from_us"])
+            & (events["__ts_us"] < dim["valid_to_us"])
+        )
+        enriched = events.join(F.broadcast(dim), cond).drop(dim[key])
+        return enriched.groupBy("segment").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.col("value").cast(_DEC)).cast("double").alias("total_value"),
+        )
+
+    return run_stream(spark, events_file, build, output_mode="complete")[0]
 
 
 def stream_hll_daily(
     spark: SparkSession,
-    events_parquet: str,
+    events_file: str,
     day_us: int,
     n_chunks: int = 3,
     band: float = 0.05,
@@ -600,49 +410,21 @@ def stream_hll_daily(
     Output per day: (day, n_exact, est_ok, stream_eq_batch); day = -1 is
     the corpus row, where stream_eq_batch asserts the union of the
     drained daily sketches equals the single-pass batch estimate."""
-    from .sink import drain_stream_to_parquet, read_sink, stream_shuffle_partitions
-
-    name = f"phsqis_shll_{uuid.uuid4().hex[:8]}"
-    stage_dir = os.path.join(tempfile.gettempdir(), name + "_src")
-    os.makedirs(stage_dir, exist_ok=True)
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = spark.read.parquet(events_parquet)
-    src.withColumn("__c", F.pmod(F.col("event_id"), F.lit(n_chunks))).repartition(
-        n_chunks, "__c"
-    ).drop("__c").write.mode("overwrite").parquet(stage_dir)
-
-    events = normalize_event_ts(
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir)
-    )
     day = (F.unix_micros(F.col("ts")) / F.lit(day_us)).cast("bigint").alias("day")
-    agg = events.select(day, "user_id").groupBy("day").agg(
-        F.hll_sketch_agg("user_id").alias("sk"),
-        F.count(F.lit(1)).alias("n_seen"),  # monotone per day → picks last update
+    updates, _ = run_stream(
+        spark,
+        events_file,
+        lambda events: events.select(day, "user_id").groupBy("day").agg(
+            F.hll_sketch_agg("user_id").alias("sk"),
+            F.count(F.lit(1)).alias("n_seen"),  # monotone per day → picks last update
+        ),
+        stage=stage_chunks(n_chunks),
     )
-    from pyspark.sql import types as T
-
-    sink_schema = T.StructType(
-        [
-            T.StructField("day", T.LongType()),
-            T.StructField("sk", T.BinaryType()),
-            T.StructField("n_seen", T.LongType()),
-        ]
-    )
-    try:
-        with stream_shuffle_partitions(spark):
-            out_dir = drain_stream_to_parquet(agg, name, output_mode="update")
-    finally:
-        shutil.rmtree(stage_dir, ignore_errors=True)
-
-    updates = read_sink(spark, out_dir, sink_schema)
     finals = updates.groupBy("day").agg(
         F.max_by(F.col("sk"), F.col("n_seen")).alias("sk")
     )
 
-    ev = normalize_event_ts(spark.read.parquet(events_parquet)).select(
+    ev = normalize_event_ts(spark.read.parquet(events_file)).select(
         day, "user_id"
     )
     batch_daily = ev.groupBy("day").agg(

@@ -162,14 +162,37 @@ def test_stream_dedup_restores_single_copy(spark):
         windows as W,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{SF_DIR}/events.parquet").schema
     deduped = W.stream_dedup(
-        spark, f"{SF_DIR}/events.parquet", schema, key_cols=["event_id"], copies=2
+        spark, f"{SF_DIR}/events.parquet", key_cols=["event_id"], copies=2
     )
     got = [r["event_id"] for r in deduped.select("event_id").collect()]
     want = [r["event_id"] for r in load_table(spark, SF_DIR, "events").select("event_id").collect()]
     assert sorted(got) == sorted(want)  # every id exactly once, none lost
+
+
+def test_stream_queries_leave_session_and_tmp_clean(spark, tmp_path, monkeypatch):
+    """Every events_stream_* query runs on the caller's session without
+    changing its settings (the streaming runner scopes shuffle partitions;
+    nanosAsLong belongs to session.py) and removes the staged source and
+    checkpoint it wrote under the temp dir; only the sink dirs the returned
+    frames read stay behind."""
+    import tempfile
+
+    from parallelized_hybrid_sorting_using_quick_insertion_sort_for_big_data_spark import (
+        queries as Q,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    fresh = spark.newSession()
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.legacy.parquet.nanosAsLong")
+    before = {k: fresh.conf.get(k) for k in keys}
+    names = [n for n in Q.queries() if n.startswith("events_stream_")]
+    assert len(names) == 12
+    for name in names:
+        assert Q.queries()[name](fresh, SF_DIR).count() > 0, name
+    assert {k: fresh.conf.get(k) for k in keys} == before
+    left = sorted(p.name for p in tmp_path.iterdir() if not p.name.endswith("_out"))
+    assert left == []
 
 
 def test_stateful_stream_equals_batch(spark):
