@@ -391,6 +391,9 @@ def main() -> None:
     # faster/slower: dedup_simhash (candidate completeness fix changed
     # chunks/threshold → different pair set) and vec_lsh_near_dup (fixed
     # nbits=12 → corpus-scaled auto-nbits → different signature width).
+    # dedup_minhash_lsh is excluded because the cell no longer exists: it
+    # folded into dedup_minhash_portable, and keeping the key would make the
+    # subtotal fall by a deleted cell's time, not by faster work.
     # Impl-only changes with identical results (stream sinks memory →
     # foreachBatch, GEMM sizing-count removal) stay in: that IS the
     # round-over-round performance delta.
@@ -405,7 +408,7 @@ def main() -> None:
         "rel_rollup_customers", "rel_distinct_aggregates", "rel_outer_join",
         "rel_sql_q3_shipping_priority", "rel_percentiles", "rel_histogram",
         "rel_cube_orders", "text_analysis", "text_token_frequency",
-        "dedup_exact", "dedup_ngram_jaccard", "dedup_minhash_lsh",
+        "dedup_exact", "dedup_ngram_jaccard",
         "vec_cosine_topk", "vec_exact_near_dup",
         "vec_ivf_topk", "vec_label_centroids",
         "events_tumbling_window", "events_sliding_window",

@@ -9,18 +9,11 @@ Scale design (the whole point of these at 100 TB):
   itself is bounded by first dropping ultra-frequent shingles (stop-shingles)
   — exposed via ``max_shingle_freq``;
 - MinHash/LSH reduces each doc to a k-int signature, bands it, and
-  equi-joins on (band, band-hash) — candidate count is controlled by the
+  equi-joins on (band, band-key) — candidate count is controlled by the
   banding parameters, independent of corpus size;
-- SimHash reduces each doc to one 64-bit int; near-dup = small Hamming
-  distance, bucketed by bit-chunks for join-based candidate generation.
-
-Each approximate pipeline comes in two hash families: the fast path uses
-``xxhash64`` (JVM built-in, vectorized; rows-only in the oracle harness,
-property-tested against exact Jaccard in tests/test_text_dedup.py), and a
-``portable=True`` md5-prefix family whose DuckDB oracle SQL is GENERATED
-from the same constants (``minhash_lsh_oracle_sql``,
-``simhash_pairs_oracle_sql``) — the near-dup decision is then auditable
-bit-for-bit by any SQL engine over the same lake.
+- SimHash reduces each doc to one 64-bit value (two 32-bit halves);
+  near-dup = small Hamming distance, bucketed by bit-chunks for join-based
+  candidate generation.
 
 The candidate-pair operators ``persist()`` their signature/band relations
 for the duration of the returned DataFrame's consumption (both join sides
@@ -166,10 +159,9 @@ def jaccard_pairs(
 _MH_PRIME = (1 << 31) - 1
 
 
-def _portable_shingle_hash(seed: int):
+def _shingle_hash(seed: int):
     """32-bit base hash from the md5 hex prefix — bit-identical in any
-    engine with md5 (DuckDB: CAST('0x'||substr(md5(s),1,8) AS BIGINT)),
-    unlike xxhash64 whose 64-bit value DuckDB cannot reproduce."""
+    engine with md5 (DuckDB: CAST('0x'||substr(md5(s),1,8) AS BIGINT))."""
     h32 = F.conv(F.substring(F.md5(F.col("shingle")), 1, 8), 16, 10).cast("long")
     return F.pmod(h32 + F.lit(seed), F.lit(_MH_PRIME))
 
@@ -181,7 +173,6 @@ def minhash_signatures(
     n: int = 8,
     num_hashes: int = 32,
     seed: int = 42,
-    portable: bool = False,
 ) -> DataFrame:
     """k-permutation MinHash signatures as (id, array<long>[k]).
 
@@ -190,16 +181,10 @@ def minhash_signatures(
     relation computes all k mins at once (map-side partial min — the shuffle
     carries k longs per doc, not the shingles).
 
-    ``portable=False`` (default): base = xxhash64 — fastest JVM path.
-    ``portable=True``: base = md5-prefix (see ``_portable_shingle_hash``) —
-    slightly slower per shingle, but the ENTIRE signature is reproducible
-    in any SQL engine, which makes the near-dup decision auditable outside
-    Spark (and DuckDB-oracle-checkable here)."""
-    base = (
-        _portable_shingle_hash(seed)
-        if portable
-        else F.pmod(F.xxhash64(F.col("shingle"), F.lit(seed)), F.lit(_MH_PRIME))
-    )
+    base = md5-prefix (see ``_shingle_hash``), so the ENTIRE signature is
+    reproducible in any SQL engine: the near-dup decision is auditable
+    outside Spark (``minhash_sketch_oracle_sql``)."""
+    base = _shingle_hash(seed)
     # distinct=False (r14, guide §2.4): min is duplicate-insensitive, so the
     # shingle relation never shuffles at all — the only exchange left in the
     # signature stage is the k-longs-per-doc partial-min aggregation. The
@@ -225,7 +210,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     threshold: float = 0.5,
     seed: int = 42,
-    portable: bool = False,
 ) -> DataFrame:
     """Near-dup pairs via MinHash banding: signature → ``bands`` bands of
     r = num_hashes/bands rows; docs colliding on any (band, band-slice) are
@@ -233,20 +217,17 @@ def minhash_lsh_pairs(
     agreement fraction) and filtered at ``threshold``.
 
     Only (band-key → id) pairs are joined — never documents, never a cross
-    join; this is the 100 TB near-dup path. ``portable=True`` switches both
-    the base hash and the band key to engine-portable forms (md5-prefix
-    base, plain concatenated band key) so the result is exactly
-    reproducible in DuckDB — see ``minhash_lsh_oracle_sql``."""
+    join; this is the 100 TB near-dup path. The band key is the plain
+    comma-joined decimal band slice, which any engine concatenates
+    identically, so the result is exactly reproducible in DuckDB — see
+    ``minhash_lsh_oracle_sql``."""
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
     r = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, n, num_hashes, seed, portable)
+    sig = minhash_signatures(df, text_col, id_col, n, num_hashes, seed)
 
     def band_key(bi: int):
-        joined = F.concat_ws(",", *[F.col("signature")[bi * r + j] for j in range(r)])
-        # non-portable: compact the key to a long (cheaper shuffle); portable:
-        # ship the decimal string, which any engine concatenates identically
-        return joined if portable else F.xxhash64(joined)
+        return F.concat_ws(",", *[F.col("signature")[bi * r + j] for j in range(r)])
 
     band_rows = sig.select(
         F.col(id_col),
@@ -305,9 +286,9 @@ def minhash_lsh_oracle_sql(
     threshold: float = 0.5,
     seed: int = 42,
 ) -> str:
-    """DuckDB SQL reproducing ``minhash_lsh_pairs(..., portable=True)``
-    EXACTLY: same shingles, same md5-prefix base hash, same (a_j, b_j)
-    permutations, same band keys, same candidate join and agreement score.
+    """DuckDB SQL reproducing ``minhash_lsh_pairs`` EXACTLY: same
+    shingles, same md5-prefix base hash, same (a_j, b_j) permutations,
+    same band keys, same candidate join and agreement score.
     Generated, not handwritten, so the constants can never drift from the
     Spark side."""
     p = _MH_PRIME
@@ -540,8 +521,8 @@ def minhash_sketch_oracle_sql(
     num_hashes: int = 32,
     seed: int = 42,
 ) -> str:
-    """DuckDB SQL reproducing ``minhash_signatures(..., portable=True)``
-    exploded to (id, sig_idx, minhash) rows — the sketch-materialization
+    """DuckDB SQL reproducing ``minhash_signatures`` exploded to
+    (id, sig_idx, minhash) rows — the sketch-materialization
     oracle. Shares every constant with ``minhash_lsh_oracle_sql`` by
     construction (same shingle CTE, base hash, and permutations)."""
     p = _MH_PRIME
@@ -576,41 +557,11 @@ FROM lists
 
 
 def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """64-bit SimHash over word tokens: per-bit majority vote of token
-    hashes, entirely with built-in expressions (explode → 64 conditional
-    sums → bit reassembly). Returns (id, simhash BIGINT)."""
-    def mask(b: int) -> int:
-        # bit 63 of a signed long is the sign bit: 1<<63 overflows, use its
-        # two's-complement value
-        return (1 << b) if b < 63 else -(1 << 63)
-
-    from ..sources.tables import spread_scan
-
-    tok = spread_scan(df).select(
-        F.col(id_col), F.explode(T.tokens(F.col(text_col))).alias("tok")
-    ).withColumn("__h", F.xxhash64("tok"))
-    votes = tok.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.when(F.col("__h").bitwiseAND(F.lit(mask(b))) != 0, 1).otherwise(-1)
-            ).alias(f"v{b}")
-            for b in range(64)
-        ]
-    )
-    bits = None
-    for b in range(64):
-        bit = F.when(F.col(f"v{b}") > 0, F.lit(mask(b))).otherwise(F.lit(0))
-        bits = bit if bits is None else bits.bitwiseOR(bit)
-    return votes.select(F.col(id_col), bits.cast("long").alias("simhash"))
-
-
-def simhash_portable(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """64-bit SimHash carried as TWO 32-bit halves (sim_hi, sim_lo), built
-    from the md5-prefix token hash — every bit reproducible in DuckDB (no
-    xxhash64, no signed-64 assembly; both halves stay non-negative).
-    Same per-bit majority-vote construction as :func:`simhash`."""
+    """64-bit SimHash over word tokens: per-bit majority vote of the md5
+    token hash, entirely with built-in expressions (explode → 64
+    conditional sums → bit reassembly). Carried as TWO 32-bit halves
+    (sim_hi, sim_lo) so every bit is reproducible in DuckDB (no signed-64
+    assembly; both halves stay non-negative)."""
     from ..sources.tables import spread_scan
 
     md5 = F.md5(F.col("tok"))
@@ -642,24 +593,53 @@ def simhash_portable(
     )
 
 
-def simhash_pairs_portable(
+def _simhash_piece_bounds(chunks: int) -> list[tuple[int, int]]:
+    """Split 64 bits into ``chunks`` contiguous pieces as evenly as possible
+    (the first ``64 % chunks`` pieces get the extra bit). Returns
+    (shift, width) per piece."""
+    base, extra = divmod(64, chunks)
+    bounds, shift = [], 0
+    for ci in range(chunks):
+        width = base + (1 if ci < extra else 0)
+        bounds.append((shift, width))
+        shift += width
+    return bounds
+
+
+def simhash_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 8,
 ) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ max_hamming, fully
-    engine-portable: nibble pieces (16 chunks of 4 bits — no half-straddle,
-    complete for max_hamming ≤ 15 by pigeonhole) over the two-half
-    signature; hamming = bit_count(hi⊕hi) + bit_count(lo⊕lo). The DuckDB
-    twin is :func:`simhash_pairs_oracle_sql`."""
-    if max_hamming > 15:
-        raise ValueError("nibble pigeonhole is complete only for max_hamming <= 15")
-    sh = simhash_portable(df, text_col, id_col)
+    """Near-dup pairs by SimHash Hamming distance ≤ max_hamming, with
+    hamming = bit_count(hi⊕hi′) + bit_count(lo⊕lo′).
+
+    Candidate generation is the block-split pigeonhole (Manku et al.,
+    WWW'07 "Detecting near-duplicates for web crawling"): split the 64-bit
+    value hi·2³²+lo into ``max_hamming + 1`` contiguous pieces; a pair with
+    ≤ ``max_hamming`` differing bits can corrupt at most ``max_hamming``
+    pieces, so it agrees on at least one — a per-piece equi-join finds ALL
+    qualifying pairs. The DuckDB twin is :func:`simhash_pairs_oracle_sql`.
+
+    Scale note: candidate volume per piece-key bucket is ~n²/2^piece_width,
+    so loose thresholds (max_hamming ≳ 12 of 64) force narrow pieces and
+    drift toward quadratic — keep max_hamming small at corpus scale.
+    """
+    if max_hamming + 1 > 64:
+        raise ValueError(
+            f"max_hamming={max_hamming} needs {max_hamming + 1} pieces of a "
+            "64-bit signature; at most 64 exist"
+        )
+    sh = simhash(df, text_col, id_col)
+    bounds = _simhash_piece_bounds(max_hamming + 1)
+    full = F.shiftleft(F.col("sim_hi"), 32).bitwiseOR(F.col("sim_lo"))
 
     def piece(ci: int):
-        part = F.col("sim_lo") if ci < 8 else F.col("sim_hi")
-        return F.shiftright(part, 4 * (ci % 8)).bitwiseAND(F.lit(15))
+        shift, width = bounds[ci]
+        if width == 64:  # max_hamming=0: the whole value; 2^64-1 is no long
+            return full
+        return F.shiftrightunsigned(full, shift).bitwiseAND(F.lit((1 << width) - 1))
 
     pieces = sh.select(
         F.col(id_col),
@@ -669,7 +649,7 @@ def simhash_pairs_portable(
             F.array(
                 *[
                     F.struct(F.lit(ci).alias("chunk"), piece(ci).alias("piece"))
-                    for ci in range(16)
+                    for ci in range(len(bounds))
                 ]
             )
         ).alias("p"),
@@ -678,6 +658,8 @@ def simhash_pairs_portable(
         F.col("p.chunk").alias("chunk"), F.col("p.piece").alias("piece"),
     )
 
+    # both join sides read pieces (docs × pieces rows): persist so the
+    # token → simhash pipeline executes once
     from pyspark.storagelevel import StorageLevel
 
     pieces = pieces.persist(StorageLevel.MEMORY_AND_DISK)
@@ -712,8 +694,13 @@ def simhash_pairs_oracle_sql(
     max_hamming: int = 8,
     token_re: str = "[a-z0-9]+",
 ) -> str:
-    """DuckDB SQL reproducing ``simhash_pairs_portable`` exactly — generated
-    alongside the Spark form so the bit layout cannot drift."""
+    """DuckDB SQL reproducing ``simhash_pairs`` exactly — generated
+    alongside the Spark form so the bit layout cannot drift. Its candidate
+    join uses 16 nibble pieces where the Spark side uses the minimal
+    complete split; every complete split yields the same pair set, and 16
+    pieces are complete for max_hamming ≤ 15."""
+    if max_hamming > 15:
+        raise ValueError("nibble pigeonhole is complete only for max_hamming <= 15")
     votes = ",\n         ".join(
         f"sum(CASE WHEN ({part} >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{n}{b}"
         for part, n in (("lo", "l"), ("hi", "h"))
@@ -765,119 +752,6 @@ SELECT id_a, id_b,
 FROM cand
 WHERE bit_count(xor(hi_a, hi_b)) + bit_count(xor(lo_a, lo_b)) <= {max_hamming}
 """
-
-
-def _simhash_piece_bounds(chunks: int) -> list[tuple[int, int]]:
-    """Split 64 bits into ``chunks`` contiguous pieces as evenly as possible
-    (the first ``64 % chunks`` pieces get the extra bit). Returns
-    (shift, width) per piece."""
-    base, extra = divmod(64, chunks)
-    bounds, shift = [], 0
-    for ci in range(chunks):
-        width = base + (1 if ci < extra else 0)
-        bounds.append((shift, width))
-        shift += width
-    return bounds
-
-
-def simhash_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 8,
-    chunks: int | None = None,
-    agree_pieces: int = 1,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ max_hamming.
-
-    Candidate generation is the block-split pigeonhole (Manku et al.,
-    WWW'07 "Detecting near-duplicates for web crawling"): split the 64-bit
-    hash into ``chunks`` contiguous pieces; a pair with ≤ ``max_hamming``
-    differing bits can corrupt at most ``max_hamming`` pieces, so it agrees
-    on ≥ ``chunks − max_hamming`` pieces. Joining on every
-    ``agree_pieces``-sized piece-combination therefore finds ALL qualifying
-    pairs iff ``chunks − max_hamming ≥ agree_pieces``; anything less is
-    approximate-recall and raises unless the caller split the bits that way
-    explicitly.
-
-    Defaults: ``chunks=None`` auto-selects ``max_hamming + agree_pieces``
-    (the minimal complete split). ``agree_pieces=1`` is a plain per-piece
-    equi-join; larger values concatenate ``agree_pieces`` piece values into
-    one wider key — C(chunks, agree_pieces)× row replication traded for
-    exponentially smaller candidate buckets (the scale lever for small
-    distance thresholds, e.g. d=3, chunks=6, agree=3 → 20 combos of
-    ~32-bit keys).
-
-    Scale note: candidate volume per piece-key bucket is ~n²/2^key_width,
-    so loose thresholds (max_hamming ≳ 12 of 64) force narrow pieces and
-    drift toward quadratic — keep max_hamming small at corpus scale or
-    raise agree_pieces.
-    """
-    from itertools import combinations
-
-    if chunks is None:
-        chunks = max_hamming + agree_pieces
-    if chunks - max_hamming < agree_pieces:
-        raise ValueError(
-            f"incomplete candidate generation: chunks={chunks}, "
-            f"max_hamming={max_hamming}, agree_pieces={agree_pieces} — "
-            "pigeonhole completeness needs chunks - max_hamming >= "
-            "agree_pieces (pairs spreading their differing bits across all "
-            "pieces would be silently dropped). Pass chunks=None to "
-            "auto-select, or lower max_hamming."
-        )
-    if chunks > 64:
-        raise ValueError(f"chunks={chunks} > 64 bits: max_hamming too loose for a 64-bit signature")
-
-    sh = simhash(df, text_col, id_col)
-    bounds = _simhash_piece_bounds(chunks)
-
-    def piece_expr(ci: int):
-        shift, width = bounds[ci]
-        return F.shiftrightunsigned(F.col("simhash"), shift).bitwiseAND(
-            F.lit((1 << width) - 1)
-        )
-
-    # one key per agree_pieces-sized combination: combo id + concatenated
-    # piece values (as a string key — widths vary per piece)
-    combos = list(combinations(range(chunks), agree_pieces))
-    keys = sh.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(gi).alias("combo"),
-                        F.concat_ws(
-                            ":", *[piece_expr(ci).cast("string") for ci in combo]
-                        ).alias("key"),
-                    )
-                    for gi, combo in enumerate(combos)
-                ]
-            )
-        ).alias("p"),
-    ).select(F.col(id_col), "simhash", F.col("p.combo").alias("combo"), F.col("p.key").alias("key"))
-
-    # both join sides read keys (docs × C(chunks, agree) rows): persist so
-    # the token → simhash pipeline executes once
-    from pyspark.storagelevel import StorageLevel
-
-    keys = keys.persist(StorageLevel.MEMORY_AND_DISK)
-
-    lhs = keys.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("h_a"), "combo", "key")
-    rhs = keys.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("h_b"), "combo", "key")
-    cand = (
-        lhs.join(rhs, ["combo", "key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "h_a", "h_b")
-        .distinct()
-    )
-    return (
-        cand.withColumn("hamming", F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -363,52 +363,15 @@ def exact_near_dup_pairs_contracted(
 # ---------------------------------------------------------------------------
 
 
-def _plane_component(plane: int, dim_idx: Column, seed: int) -> Column:
-    """Deterministic pseudo-random N(0,1)-ish plane component from pure
-    column arithmetic: two xxhash64 draws → uniform(0,1] pair → Box-Muller.
-    Entirely JVM-side; identical on every executor with no broadcast."""
-    h1 = F.pmod(F.xxhash64(F.lit(seed), F.lit(plane), dim_idx), F.lit(1 << 30))
-    h2 = F.pmod(F.xxhash64(F.lit(seed + 1), F.lit(plane), dim_idx), F.lit(1 << 30))
-    u1 = (h1 + 1).cast("double") / F.lit(float(1 << 30))
-    u2 = (h2 + 1).cast("double") / F.lit(float(1 << 30))
-    return F.sqrt(-2.0 * F.log(u1)) * F.cos(F.lit(2.0 * math.pi) * u2)
-
-
-def lsh_signature(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    nbits: int = 12,
-    seed: int = 42,
-) -> DataFrame:
-    """Append an nbits-bit random-hyperplane signature column ``bucket``:
-    bit p = sign(v · plane_p). Same-bucket vectors are cosine-close with
-    probability rising in cos — the standard SimHash-for-angles scheme."""
-    from ..sources.tables import spread_scan
-
-    df = spread_scan(df)
-    v = _as_double(F.col(vec_col))
-    idx = F.sequence(F.lit(0), F.size(v) - 1)
-
-    bucket = F.lit(0).cast("long")
-    for p in range(nbits):
-        proj = F.aggregate(
-            F.zip_with(v, idx, lambda x, i: x * _plane_component(p, i, seed)),
-            F.lit(0.0),
-            lambda s, x: s + x,
-        )
-        bucket = bucket.bitwiseOR(F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
-    return df.withColumn("bucket", bucket)
-
-
 def make_planes(nbits: int, dim: int, seed: int = 42) -> list[list[float]]:
     """Deterministic hyperplane table (md5 → Box-Muller) as plain floats.
 
     Unlike the shingle hashes in ``dedup`` — which hash DATA and therefore
     must be recomputed by whatever engine audits the result — hyperplanes
-    are data-independent, so the portable form is a SHARED LITERAL table:
-    both the Spark plan and the generated oracle SQL embed these exact
-    binary64 values. That removes the two cross-engine hazards of deriving
-    planes in-engine (libm ``log``/``cos`` differing in the last ulp, and a
+    are data-independent, so they are a SHARED LITERAL table: both the
+    Spark plan and the generated oracle SQL embed these exact binary64
+    values. That removes the two cross-engine hazards of deriving planes
+    in-engine (libm ``log``/``cos`` differing in the last ulp, and a
     per-row hash cost), while staying reproducible: anyone can regenerate
     the table from (seed, nbits, dim) with stdlib hashlib."""
     import hashlib
@@ -429,9 +392,12 @@ def make_planes(nbits: int, dim: int, seed: int = 42) -> list[list[float]]:
 def lsh_signature_planes(
     df: DataFrame, planes: list[list[float]], vec_col: str = "embedding"
 ) -> DataFrame:
-    """``lsh_signature`` over an explicit literal plane table; projections
-    are rounded to 9 digits before the sign test so any engine summing the
-    same products in a different order lands on the same bit."""
+    """Append an nbits-bit random-hyperplane signature column ``bucket``
+    (nbits = ``len(planes)``): bit p = sign(v · plane_p). Same-bucket
+    vectors are cosine-close with probability rising in cos — the standard
+    SimHash-for-angles scheme. Projections are rounded to 9 digits before
+    the sign test so any engine summing the same products in a different
+    order lands on the same bit."""
     from ..sources.tables import spread_scan
 
     df = spread_scan(df)
@@ -447,24 +413,6 @@ def lsh_signature_planes(
         )
         bucket = bucket.bitwiseOR(F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
     return df.withColumn("bucket", bucket)
-
-
-def lsh_portable_near_dup_pairs(
-    df: DataFrame,
-    planes: list[list[float]],
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int | None = 9,
-) -> DataFrame:
-    """``lsh_near_dup_pairs`` with a shared literal plane table — candidate
-    generation and re-rank are identical; only the signature derivation
-    changes, making the whole pipeline reproducible by the generated DuckDB
-    oracle (``lsh_portable_oracle_sql``)."""
-    sig = lsh_signature_planes(df, planes, vec_col)
-    return _multiprobe_fold_pairs(
-        sig, len(planes), threshold, id_col, vec_col, round_digits
-    )
 
 
 def plane_bits_sql(
@@ -491,28 +439,28 @@ def portable_nbits(
     n_rows: int,
     target_bucket_size: int = 4,
     min_bits: int = 6,
-    max_bits: int = 16,
+    max_bits: int = 24,
 ) -> int:
-    """Signature width for the PORTABLE (literal-plane, oracle-replayable)
-    LSH pipeline: the smallest b with 2^b buckets ≥ ceil(n / target),
-    clamped to [min_bits, max_bits].
+    """Signature width for the literal-plane LSH pipeline: the smallest b
+    with 2^b buckets ≥ ceil(n / target), clamped to [min_bits, max_bits].
 
-    Same scale dial as ``choose_nbits`` (fixed width ⇒ bucket population —
-    and therefore candidate pairs — grows linearly/quadratically with the
-    corpus; width ∝ log2(n) keeps per-bucket work constant), but computed
-    with INTEGER arithmetic only: ceil-divide then bit-length, no float
-    ``log2`` whose last-ulp behavior could differ between engines at exact
-    powers of two. The generated oracle (``lsh_adaptive_oracle_sql``)
-    recomputes the identical value from ``count(*)`` with the same integer
-    ops, so Spark and DuckDB can never disagree on the width.
+    This is the scale dial for ``lsh_near_dup_pairs`` /
+    ``bucketed_near_dup_pairs``: a fixed width caps the bucket count, so
+    bucket population — and therefore candidate pairs — grows
+    linearly/quadratically with the corpus; width ∝ log2(n) keeps
+    per-bucket work constant, and the multi-probe join fans out by
+    (nbits+1), i.e. only logarithmically. Computed with INTEGER arithmetic
+    only: ceil-divide then bit-length, no float ``log2`` whose last-ulp
+    behavior could differ between engines at exact powers of two. The
+    generated oracle (``lsh_adaptive_oracle_sql``) recomputes the identical
+    value from ``count(*)`` with the same integer ops, so Spark and DuckDB
+    can never disagree on the width.
 
-    ``max_bits`` defaults to 16 (65k buckets ≈ 260k vectors at target 4):
-    the literal-plane form exists to be oracle-replayable, not to be the
-    production path — beyond that, use ``lsh_near_dup_pairs`` (in-engine
-    xxhash signatures, unbounded width). This was the r09 scale finding:
-    the portable query's FIXED 8-bit table made candidate pairs grow
-    ~quadratically (slope 7.96×/10× rows, SCALE_CHECK_r09); adaptive width
-    restores the log-growth design of the in-engine path."""
+    ``max_bits`` defaults to 24 (16M buckets ≈ 67M vectors at target 4);
+    above that, single-bit probing starts missing too much — switch to
+    banded LSH (``dedup.minhash_lsh_pairs``-style multi-table). This was
+    the r09 scale finding: a FIXED 8-bit table made candidate pairs grow
+    ~quadratically (slope 7.96×/10× rows, SCALE_CHECK_r09)."""
     if n_rows <= 0:
         return min_bits
     need_buckets = (n_rows + target_bucket_size - 1) // target_bucket_size
@@ -524,7 +472,7 @@ def nbits_sql(
     corpus_rel: str = "corpus",
     target_bucket_size: int = 4,
     min_bits: int = 6,
-    max_bits: int = 16,
+    max_bits: int = 24,
 ) -> str:
     """DuckDB CTE body computing ``portable_nbits(count(*))`` with the same
     integer arithmetic (ceil-divide; smallest b with 1<<b ≥ need; clamp) —
@@ -537,30 +485,6 @@ def nbits_sql(
   FROM (SELECT count(*) AS cnt FROM {corpus_rel}) p"""
 
 
-def lsh_portable_oracle_sql(
-    planes: list[list[float]],
-    threshold: float,
-    corpus_sql: str,
-    id_col: str = "vec_id",
-) -> str:
-    """DuckDB SQL reproducing ``lsh_portable_near_dup_pairs`` EXACTLY over
-    ``corpus_sql`` (any SELECT yielding (id, v DOUBLE[])): same literal
-    planes, same rounded-projection sign bits, candidates = bucket Hamming
-    distance ≤ 1 (the multi-probe set), same rounded-cosine re-rank.
-    Generated from the same plane table the Spark plan embeds."""
-    plane_bits = plane_bits_sql(planes)
-    return f"""
-WITH corpus AS ({corpus_sql}),
-sig AS (SELECT {id_col}, v, {plane_bits} AS bucket FROM corpus)
-SELECT a.{id_col} AS id_a, b.{id_col} AS id_b,
-       round(list_cosine_similarity(a.v, b.v), 9) AS sim
-FROM sig a JOIN sig b
-  ON a.{id_col} < b.{id_col}
- AND bit_count(xor(a.bucket, b.bucket)) <= 1
-WHERE round(list_cosine_similarity(a.v, b.v), 9) >= {threshold}
-"""
-
-
 def lsh_adaptive_oracle_sql(
     planes: list[list[float]],
     threshold: float,
@@ -568,16 +492,21 @@ def lsh_adaptive_oracle_sql(
     id_col: str = "vec_id",
     target_bucket_size: int = 4,
     min_bits: int = 6,
-    max_bits: int = 16,
+    max_bits: int = 24,
 ) -> str:
-    """``lsh_portable_oracle_sql`` with ADAPTIVE signature width: the oracle
-    recomputes ``portable_nbits(count(*))`` in SQL (integer-exact, see
-    ``nbits_sql``) and gates each literal plane's bit on ``p < nbits`` —
-    the exact mirror of the Spark side taking ``planes[:nbits]``. The
-    candidate predicate (bucket Hamming distance ≤ 1) needs no gating:
-    bits ≥ nbits are zero on both sides by construction. ``planes`` must
-    carry at least ``max_bits`` rows (``make_planes`` rows are
-    prefix-stable in nbits, so one max-width table serves every width)."""
+    """DuckDB SQL reproducing ``lsh_near_dup_pairs`` EXACTLY over
+    ``corpus_sql`` (any SELECT yielding (id, v DOUBLE[])): same literal
+    planes, same rounded-projection sign bits, candidates = bucket Hamming
+    distance ≤ 1 (the multi-probe set), same rounded-cosine re-rank.
+
+    The signature width is ADAPTIVE: the oracle recomputes
+    ``portable_nbits(count(*))`` in SQL (integer-exact, see ``nbits_sql``)
+    and gates each literal plane's bit on ``p < nbits`` — the exact mirror
+    of the Spark side taking ``planes[:nbits]``. The candidate predicate
+    (bucket Hamming distance ≤ 1) needs no gating: bits ≥ nbits are zero
+    on both sides by construction. ``planes`` must carry at least
+    ``max_bits`` rows (``make_planes`` rows are prefix-stable in nbits, so
+    one max-width table serves every width)."""
     if len(planes) < max_bits:
         raise ValueError(f"need ≥{max_bits} planes, got {len(planes)}")
     plane_bits = plane_bits_sql(planes[:max_bits], gate_expr="nb.nbits")
@@ -595,84 +524,33 @@ WHERE round(list_cosine_similarity(a.v, b.v), 9) >= {threshold}
 """
 
 
-def choose_nbits(
-    n_rows: int,
-    target_bucket_size: int = 32,
-    min_bits: int = 6,
-    max_bits: int = 24,
-) -> int:
-    """Signature width that keeps the EXPECTED bucket population near
-    ``target_bucket_size``: nbits = ceil(log2(n / target)), clamped.
-
-    This is the scale dial for ``lsh_near_dup_pairs`` /
-    ``bucketed_near_dup_pairs``: a fixed nbits caps the bucket count, so at
-    100× the corpus each bucket is 100× larger and the in-bucket re-rank
-    goes quadratic. Scaling nbits with log2(n) keeps per-bucket work
-    constant; the multi-probe join fans out by (nbits+1), i.e. only
-    logarithmically in corpus size. The 32-vector target suits the
-    per-pair ``zip_with`` re-rank, whose cost is linear in candidate pairs
-    (~(nbits+1)·bucket/2 per vector); the per-bucket GEMM re-rank
-    amortizes better and can pass a larger target (128+). Above
-    ``max_bits`` (16M buckets) single-bit probing starts missing too much —
-    switch to banded LSH (``dedup.minhash`` style multi-table) beyond
-    that."""
-    if n_rows <= 0:
-        return min_bits
-    need = math.ceil(math.log2(max(1.0, n_rows / float(target_bucket_size))))
-    return max(min_bits, min(max_bits, need))
-
-
 def lsh_near_dup_pairs(
     df: DataFrame,
+    planes: list[list[float]],
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    nbits: int | None = None,
-    seed: int = 42,
     round_digits: int | None = 9,
-    n_rows: int | None = None,
-    target_bucket_size: int = 8,
 ) -> DataFrame:
-    """Near-dup pairs via LSH buckets: candidates = same bucket OR buckets
-    at Hamming distance 1 (multi-probe), re-ranked by exact cosine. Never
-    quadratic in corpus size; bucket-key join only.
+    """Near-dup pairs via LSH buckets over the literal plane table
+    ``planes`` (``make_planes``; size it with ``portable_nbits``):
+    candidates = same bucket OR buckets at Hamming distance 1
+    (multi-probe), re-ranked by exact cosine with per-pair expression
+    folds. Never quadratic in corpus size; bucket-key join only. The whole
+    pipeline is reproducible by the generated DuckDB oracle
+    (``lsh_adaptive_oracle_sql``).
 
-    ``nbits=None`` auto-selects via ``choose_nbits`` so bucket population
-    stays ~constant as the corpus grows (pass ``n_rows`` to avoid the
-    sizing count; for a plain parquet scan the count is metadata-only).
-    The default ``target_bucket_size`` is SMALL (8): this path re-ranks with
-    per-pair expression folds, whose cost per vector is
-    ≈ (nbits+1)·bucket_size element-wise fold evaluations — interpreted,
-    not codegen'd — so shrinking buckets buys back far more re-rank time
-    than the extra probe fanout costs (fanout grows only with log2 n).
-    The GEMM re-rank (``bucketed_near_dup_pairs``) inverts that trade."""
+    The fold re-rank costs ≈ (nbits+1)·bucket_size element-wise fold
+    evaluations per vector — interpreted, not codegen'd — so this path
+    wants SMALL buckets; the GEMM re-rank (``bucketed_near_dup_pairs``)
+    inverts that trade."""
     from pyspark.storagelevel import StorageLevel
 
-    if nbits is None:
-        if n_rows is None:
-            n_rows = df.count()
-        nbits = choose_nbits(n_rows, target_bucket_size)
-
-    sig = lsh_signature(df, vec_col, nbits, seed)
-    return _multiprobe_fold_pairs(sig, nbits, threshold, id_col, vec_col, round_digits)
-
-
-def _multiprobe_fold_pairs(
-    sig: DataFrame,
-    nbits: int,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    round_digits: int | None,
-) -> DataFrame:
-    """Candidate join (same bucket or 1-bit flip) + per-pair exact cosine
-    re-rank over a relation that already carries a ``bucket`` column."""
-    from pyspark.storagelevel import StorageLevel
-
+    nbits = len(planes)
     # both join sides read the signature relation; persist so the nbits
     # hyperplane projections (and the per-vector norm — computed once HERE,
     # never per candidate pair) run once per vector
-    sig = sig.select(
+    sig = lsh_signature_planes(df, planes, vec_col).select(
         F.col(id_col),
         F.col(vec_col),
         "bucket",
@@ -711,46 +589,32 @@ def _multiprobe_fold_pairs(
 
 def bucketed_near_dup_pairs(
     df: DataFrame,
+    planes: list[list[float]],
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    nbits: int | None = None,
-    seed: int = 42,
     sub_blocks: int = 1,
     round_digits: int | None = 9,
-    n_rows: int | None = None,
-    target_bucket_size: int = 128,
-    planes: list[list[float]] | None = None,
 ) -> DataFrame:
     """Near-dup pairs: LSH-bucketed candidate generation + per-bucket blocked
     GEMM re-rank — the composition ``exact_near_dup_pairs_blocked``'s
     docstring prescribes for corpus scale.
 
-    Candidate set is identical to ``lsh_near_dup_pairs`` (same bucket or
-    1-bit-flip neighbor), but the exact re-rank inside each bucket group is
-    one numpy matrix product per group (Arrow-batched ``applyInPandas``)
-    instead of per-pair ``zip_with`` folds. Versus the corpus-wide blocked
-    GEMM: replication is (nbits + 2·sub_blocks − 1) rows per vector —
-    logarithmic in corpus size via ``choose_nbits`` — not O(n/block_size),
-    and there is no sizing ``count()`` job when ``n_rows`` is passed.
+    Candidate set is identical to ``lsh_near_dup_pairs`` over the same
+    ``planes`` (same bucket or 1-bit-flip neighbor), but the exact re-rank
+    inside each bucket group is one numpy matrix product per group
+    (Arrow-batched ``applyInPandas``) instead of per-pair ``zip_with``
+    folds. Versus the corpus-wide blocked GEMM: replication is
+    (nbits + 2·sub_blocks − 1) rows per vector — logarithmic in corpus size
+    via ``portable_nbits`` — not O(n/block_size), and there is no sizing
+    ``count()`` job. The whole pipeline is reproducible by the generated
+    DuckDB oracle (``lsh_adaptive_oracle_sql``).
 
     ``sub_blocks`` is the straggler guard: each bucket's GEMM is split into
     sub_blocks × sub_blocks independent tile products, bounding per-task
     memory when a bucket comes out hot (skewed embedding spaces). With
-    auto-nbits keeping buckets ≈128 vectors, 1 is right; raise it only if
+    adaptive nbits keeping buckets small, 1 is right; raise it only if
     bucket-size skew shows up in task-time metrics.
-
-    The default ``target_bucket_size`` is LARGE (128, vs 8 on the fold
-    path): a matrix product amortizes per-pair cost to ~nothing, so bigger
-    buckets mean fewer probe-replicated rows and fewer tiny numpy calls.
-    Note the candidate set equals ``lsh_near_dup_pairs``'s only at equal
-    nbits — pass the same explicit nbits/target to compare the two.
-
-    ``planes``: an explicit literal plane table (``make_planes``) switches
-    signature derivation to ``lsh_signature_planes`` — same bucket/GEMM
-    topology, but the whole pipeline becomes reproducible by the generated
-    DuckDB oracle (``lsh_portable_oracle_sql``): candidates are exactly the
-    Hamming-distance-≤1 bucket pairs, re-rank is the same rounded cosine.
 
     Oracle-equality caveat: the numpy GEMM sums float64 products in a
     different association order than a sequential engine's per-pair fold
@@ -765,19 +629,11 @@ def bucketed_near_dup_pairs(
 
     from pyspark.storagelevel import StorageLevel
 
-    if planes is not None:
-        nbits = len(planes)
-        signed = lsh_signature_planes(df, planes, vec_col)
-    else:
-        if nbits is None:
-            if n_rows is None:
-                n_rows = df.count()
-            nbits = choose_nbits(n_rows, target_bucket_size)
-        signed = lsh_signature(df, vec_col, nbits, seed)
+    nbits = len(planes)
     S = max(1, sub_blocks)
 
     sig = (
-        signed
+        lsh_signature_planes(df, planes, vec_col)
         .select(
             F.col(id_col).alias("__id"),
             _as_double(F.col(vec_col)).alias("__v"),

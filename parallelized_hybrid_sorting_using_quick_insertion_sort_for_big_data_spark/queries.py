@@ -89,43 +89,33 @@ _DRIVER_WINDOW = 50
 # that slides when the round's own CORRECTNESS artifact lands, so a name
 # checked exactly two rounds back could fall out at judge time
 # (vec_bucketed_near_dup, r10). The scheme is now TIME-INVARIANT: only 35
-# of the 211 registered queries lack an ORACLE_QUERIES parity pin, and
+# of the 208 registered queries lack an ORACLE_QUERIES parity pin, and
 # 35 < 50, so the window simply carries EVERY unpinned name EVERY round —
 # FRONT = changed-this-round names, MUST = all unpinned names
 # oldest-driver-row-first, FILL = pinned names oldest-checked-first. The
 # committed tuple is verified by
 # tests/test_session.py::test_driver_window_survives_this_rounds_artifact
-# via the invariant registry ⊆ (window ∪ pins ∪ rows-only), which holds (or
+# via the invariant registry ⊆ (window ∪ pins), which holds (or
 # fails) identically no matter which CORRECTNESS artifacts are on disk.
 _DRIVER_PRIORITY: tuple[str, ...] = (
-    # ROUND 14 WINDOW — output of
-    #   scripts/rotate_window.py --front <17 names, OPTIMIZATION_r14.md>
-    # FRONT (17): the seven r13 changed-path names whose oracle artifact
-    # predated final HEAD (VERDICT r13 item 1a: vec_ivf_nprobe_recall,
-    # vec_ivf_topk, vec_pq_recall_sweep, vec_ivfpq_topk,
-    # vec_kmeans_centroids, sample_cluster_balanced, mm_frame_near_dup)
-    # plus every r14-changed path (kcore/LPA lazy rounds, pagerank
-    # nodes pin, minhash family, copurchase scan alignment,
-    # association-rules/bfs examinations).
+    # Output of
+    #   scripts/rotate_window.py --front <the 10 names below>
+    # FRONT (10): every surviving near-dup query — MinHash, SimHash and
+    # hyperplane LSH now have one (oracle-replayable) implementation each,
+    # the SimHash candidate split changed, and the LSH oracle's plane table
+    # widened to 24 rows — plus the two raw-gram decontam callers.
     # MUST = the full unpinned set (time-invariant cover), FILL = pinned
     # names oldest-checked-first.
-    "vec_ivf_nprobe_recall",
-    "vec_ivf_topk",
-    "vec_pq_recall_sweep",
-    "vec_ivfpq_topk",
-    "vec_kmeans_centroids",
-    "sample_cluster_balanced",
-    "mm_frame_near_dup",
-    "graph_kcore",
-    "graph_lpa_communities",
-    "graph_pagerank_trade",
-    "graph_bfs_levels",
     "dedup_minhash_portable",
     "dedup_incremental_minhash",
     "text_minhash_doc_sketch",
     "dedup_lsh_recall",
-    "rel_copurchase_similarity",
-    "rel_association_rules",
+    "dedup_simhash_portable",
+    "vec_lsh_portable",
+    "vec_bucketed_near_dup",
+    "vec_ann_recall",
+    "decontam_ngram_overlap",
+    "pipeline_pretraining_corpus",
     "events_outlier_robust",
     "events_resample_gapfill",
     "events_stream_dedup",
@@ -135,6 +125,10 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
     "events_zorder_code",
     "graph_adamic_adar",
     "graph_assortativity",
+    "graph_bfs_levels",
+    "graph_kcore",
+    "graph_lpa_communities",
+    "graph_pagerank_trade",
     "graph_triangle_count",
     "mm_frame_sample",
     "pipeline_data_quality_audit",
@@ -152,13 +146,16 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
     "text_bpe_segmentation",
     "text_crossdup_coverage",
     "text_vocab_growth",
-    "vec_bucketed_near_dup",
     "vec_kmeans_ivf_topk",
     "vec_quantize_int8",
     "vec_semantic_dedup",
     "vec_topk_with_metadata",
-    "rel_chisq_independence",
-    "rel_equifreq_binning",
+    "rel_gini_revenue",
+    "rel_groupwise_regression",
+    "rel_rfm_segmentation",
+    "rel_window_value_functions",
+    "rel_winsorized_stats",
+    "rel_yoy_revenue",
 )
 
 

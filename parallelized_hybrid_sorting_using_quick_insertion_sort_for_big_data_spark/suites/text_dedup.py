@@ -166,21 +166,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 5. MinHash + LSH banding (rows-only: xxhash64 isn't portable to DuckDB;
-#    property-tested against exact Jaccard in tests/test_text_dedup.py)
+# 5. MinHash + LSH banding
 # ---------------------------------------------------------------------------
-
-
-@query("dedup_minhash_lsh", sql=None)
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash(32 perms)+LSH(8 bands) near-dup candidates at est-Jaccard ≥
-    0.5 — the sublinear near-dup path for corpus scale (xxhash64 base hash:
-    fastest JVM path, rows-only here; the portable variant below is the
-    oracle-checked twin)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.minhash_lsh_pairs(
-        docs, n=_NGRAM_N, num_hashes=32, bands=8, threshold=_JACCARD_T
-    )
 
 
 @query(
@@ -190,16 +177,15 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH with the engine-portable hash family (md5-prefix base,
-    modular permutations, concatenated band keys): identical topology to
-    ``dedup_minhash_lsh`` but every signature bit is reproducible in DuckDB,
-    so the FULL approximate pipeline — shingles → signatures → banding →
-    candidate join → agreement score — is value-hash-checked by the driver,
-    not just property-tested."""
+    """MinHash(32 perms)+LSH(8 bands) near-dup candidates at est-Jaccard ≥
+    0.5 — the sublinear near-dup path for corpus scale. Every signature bit
+    (md5-prefix base, modular permutations, concatenated band keys) is
+    reproducible in DuckDB, so the FULL approximate pipeline — shingles →
+    signatures → banding → candidate join → agreement score — is
+    value-hash-checked by the driver, not just property-tested."""
     docs = load_table(spark, sf_dir, "documents")
     return dedup.minhash_lsh_pairs(
-        docs, n=_NGRAM_N, num_hashes=32, bands=8, threshold=_JACCARD_T,
-        seed=42, portable=True,
+        docs, n=_NGRAM_N, num_hashes=32, bands=8, threshold=_JACCARD_T, seed=42
     )
 
 
@@ -236,7 +222,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = docs.unionAll(batch)
     pairs = dedup.minhash_lsh_pairs(
-        corpus, num_hashes=32, bands=8, threshold=0.5, seed=42, portable=True
+        corpus, num_hashes=32, bands=8, threshold=0.5, seed=42
     )
     return pairs.where(
         (F.col("id_a") < _BATCH_SHIFT) & (F.col("id_b") >= _BATCH_SHIFT)
@@ -252,16 +238,14 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sql=dedup.minhash_sketch_oracle_sql(n=_NGRAM_N, num_hashes=32, seed=42),
 )
 def text_minhash_doc_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized per-document MinHash sketch: the portable 32-permutation
+    """Materialized per-document MinHash sketch: the 32-permutation
     signature exploded to (doc_id, sig_idx, minhash) rows — the artifact a
     pipeline persists so later corpora can be deduped AGAINST this one
     without re-shingling it (cross-corpus / incremental dedup). One shuffle
     (the per-doc min aggregation, map-side partial); every signature value
     is hash-checked against the generated DuckDB mirror."""
     docs = load_table(spark, sf_dir, "documents")
-    sig = dedup.minhash_signatures(
-        docs, n=_NGRAM_N, num_hashes=32, seed=42, portable=True
-    )
+    sig = dedup.minhash_signatures(docs, n=_NGRAM_N, num_hashes=32, seed=42)
     return sig.select(
         "doc_id", F.posexplode("signature").alias("sig_idx", "minhash")
     ).select("doc_id", F.col("sig_idx").cast("bigint").alias("sig_idx"), "minhash")
@@ -281,23 +265,15 @@ def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.winnow_fingerprints(docs, k=_NGRAM_N, w=4, seed=42)
 
 
-@query("dedup_simhash", sql=None)
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash-64 near-dup pairs at Hamming ≤ 8 via the complete pigeonhole
-    candidate join (auto 9-piece split: any pair within distance 8 must
-    agree on ≥1 of 9 pieces — no qualifying pair can be missed)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.simhash_pairs(docs, max_hamming=8)
-
-
 @query("dedup_simhash_portable", sql=dedup.simhash_pairs_oracle_sql(max_hamming=8))
 def dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs with the engine-portable construction
-    (md5-prefix token hash, two 32-bit signature halves, 16 nibble pieces —
-    complete for Hamming ≤ 15): the whole approximate pipeline is
-    value-hash-checked against generated DuckDB SQL."""
+    """SimHash-64 near-dup pairs at Hamming ≤ 8 (md5-prefix token hash, two
+    32-bit signature halves) via the complete pigeonhole candidate join:
+    any pair within distance 8 agrees on ≥1 of 9 pieces, so no qualifying
+    pair can be missed. The whole approximate pipeline is value-hash-checked
+    against generated DuckDB SQL."""
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.simhash_pairs_portable(docs, max_hamming=8)
+    return dedup.simhash_pairs(docs, max_hamming=8)
 
 
 # ---------------------------------------------------------------------------
@@ -463,8 +439,7 @@ def pipeline_pretraining_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = dedup.exact_dedup(corpus)
     bench = docs.where(F.col("doc_id") % 37 == 0)
     stats = _DC.contamination_stats(
-        deduped, bench, n=_PRETRAIN_N, threshold=_PRETRAIN_CONTAM_T,
-        hash_grams=False,
+        deduped, bench, n=_PRETRAIN_N, threshold=_PRETRAIN_CONTAM_T
     )
     ann = deduped.join(stats.select("doc_id", "contaminated"), "doc_id").select(
         "doc_id",
@@ -1665,7 +1640,7 @@ _RC_MOD = 5
 # even at the driver's sf0.01 (100 base docs -> ~0.8 keep rate), so every
 # driver round value-checks the coin replay itself, and a ~80-pair sample
 # still pins recall to a few percent. The production LSH path
-# (dedup_minhash_lsh / minhash_lsh_pairs) is untouched — full corpus.
+# (dedup_minhash_portable / minhash_lsh_pairs) is untouched — full corpus.
 _RC_CAP = 80
 
 _RC_COIN = f"({sampling.bucket_sql('doc_id', 'lshrc')})"
@@ -1723,7 +1698,7 @@ FROM counts
 
 @query("dedup_lsh_recall", sql=_LSH_RECALL_ORACLE)
 def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall and precision of the portable MinHash-LSH near-dup path
+    """Recall and precision of the MinHash-LSH near-dup path
     against the exact capped-shingle Jaccard pair set, on a corpus with
     deterministically planted suffix-perturbed near-dups — one row
     (n_exact, n_lsh, n_hit, recall, est_precision), every leg and the
@@ -1767,7 +1742,7 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh = (
         dedup.minhash_lsh_pairs(
             corpus, n=_NGRAM_N, num_hashes=32, bands=8, threshold=_JACCARD_T,
-            seed=42, portable=True,
+            seed=42,
         )
         .select("id_a", "id_b")
         .withColumn("__l", F.lit(1))

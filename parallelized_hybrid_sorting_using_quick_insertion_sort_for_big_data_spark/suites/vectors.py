@@ -90,37 +90,23 @@ def vec_exact_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("vec_lsh_near_dup", sql=None)
-def vec_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs via random-hyperplane LSH buckets + multi-probe +
-    exact re-rank — the non-quadratic corpus-scale path. nbits auto-scales
-    with corpus size (choose_nbits: ~8 vectors/bucket — the fold re-rank
-    pays per pair, so small buckets win). Rows-only in the oracle harness;
-    recall vs the exact query is asserted in tests."""
-    corpus, n = _dup_corpus(spark, sf_dir)
-    return similarity.lsh_near_dup_pairs(
-        corpus, threshold=_NEARDUP_T, nbits=None, n_rows=n
-    )
-
-
 # Max-width literal plane table; every query takes a prefix. make_planes
-# rows depend only on (seed, p, i), so make_planes(16)[:8] == make_planes(8)
+# rows depend only on (seed, p, i), so make_planes(24)[:8] == make_planes(8)
 # — one table serves every width.
-_PORTABLE_MAX_BITS = 16
+_PORTABLE_MAX_BITS = 24
 _PORTABLE_PLANES = similarity.make_planes(nbits=_PORTABLE_MAX_BITS, dim=64, seed=42)
 # vec_ann_recall measures recall at a PINNED 8-bit configuration (a
 # measurement query: the config under test is part of the question).
 _ANN_PLANES = _PORTABLE_PLANES[:8]
 
-# Adaptive-width portable LSH (r09 scale fix): the r09 fixed-8-bit table
-# capped the bucket count at 256, so bucket population — and candidate
-# pairs — grew ~quadratically with the corpus (SCALE_CHECK_r09 slope
-# 7.96×/10× rows with tight reps). Width now scales as portable_nbits(n)
-# ≈ log2(n/4), recomputed integer-exactly by the oracle from count(*), so
-# per-bucket work stays constant and the probe fanout grows only
-# logarithmically — the same design the in-engine path (choose_nbits) has
-# had since r04. target=4 keeps the sf0.01 corpus (1000 vectors) at
-# exactly 8 bits, so driver-history result sets are unchanged.
+# Adaptive-width LSH (r09 scale fix): the r09 fixed-8-bit table capped the
+# bucket count at 256, so bucket population — and candidate pairs — grew
+# ~quadratically with the corpus (SCALE_CHECK_r09 slope 7.96×/10× rows with
+# tight reps). Width now scales as portable_nbits(n) ≈ log2(n/4),
+# recomputed integer-exactly by the oracle from count(*), so per-bucket
+# work stays constant and the probe fanout grows only logarithmically.
+# target=4 keeps the sf0.01 corpus (1000 vectors) at exactly 8 bits, so
+# driver-history result sets are unchanged.
 _LSH_PORTABLE_ORACLE = similarity.lsh_adaptive_oracle_sql(
     _PORTABLE_PLANES,
     threshold=0.95,
@@ -134,11 +120,13 @@ _LSH_PORTABLE_ORACLE = similarity.lsh_adaptive_oracle_sql(
 
 @query("vec_lsh_portable", sql=_LSH_PORTABLE_ORACLE)
 def vec_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The LSH near-dup pipeline with a SHARED LITERAL plane table (md5 →
-    Box-Muller, regenerable from the seed): end-to-end oracle-checked —
-    DuckDB recomputes signatures, multi-probe candidates, and the rounded
-    cosine re-rank from the same literals. Threshold 0.95 (vs 0.98 on the
-    xxhash64 path) so the check also exercises non-twin matches.
+    """Near-dup pairs via random-hyperplane LSH buckets + multi-probe +
+    exact re-rank — the non-quadratic corpus-scale path — over a SHARED
+    LITERAL plane table (md5 → Box-Muller, regenerable from the seed):
+    end-to-end oracle-checked — DuckDB recomputes signatures, multi-probe
+    candidates, and the rounded cosine re-rank from the same literals.
+    Threshold 0.95 (vs 0.98 on ``vec_exact_near_dup``) so the check also
+    exercises non-twin matches.
 
     Signature width is ``portable_nbits(n)`` — integer-exact, recomputed
     by the oracle from count(*) — and the corpus count n comes from parquet
@@ -146,7 +134,7 @@ def vec_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix of the plane table."""
     corpus, n = _dup_corpus(spark, sf_dir)
     nbits = similarity.portable_nbits(n, max_bits=_PORTABLE_MAX_BITS)
-    return similarity.lsh_portable_near_dup_pairs(
+    return similarity.lsh_near_dup_pairs(
         corpus, _PORTABLE_PLANES[:nbits], threshold=0.95
     )
 
@@ -162,10 +150,7 @@ def vec_bucketed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     therefore the same generated SQL) as ``vec_lsh_portable``: the two
     queries are independent physical strategies (per-pair fold re-rank vs
     per-bucket GEMM) that must produce the identical pair set and rounded
-    sims — the strongest equivalence check the harness can express. The
-    auto-scaled in-engine-signature form (``nbits=None``) remains the
-    production entry point and is exercised by ``vec_lsh_near_dup`` +
-    pytest pair-set/recall assertions.
+    sims — the strongest equivalence check the harness can express.
 
     Known oracle fragility (ADVICE r04): the GEMM side sums float64
     products in parallel order, DuckDB's ``list_cosine_similarity``
@@ -176,7 +161,7 @@ def vec_bucketed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, n = _dup_corpus(spark, sf_dir)
     nbits = similarity.portable_nbits(n, max_bits=_PORTABLE_MAX_BITS)
     return similarity.bucketed_near_dup_pairs(
-        corpus, threshold=0.95, planes=_PORTABLE_PLANES[:nbits]
+        corpus, _PORTABLE_PLANES[:nbits], threshold=0.95
     )
 
 
@@ -215,7 +200,7 @@ FROM counts
 def vec_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN quality measurement — the pipeline-health query every ANN
     deployment runs: exact near-dup pairs (blocked GEMM baseline) vs the
-    portable-LSH approximate pairs at the same threshold, reduced to one
+    LSH approximate pairs at the same threshold, reduced to one
     row (n_exact, n_ann, n_hit, recall). Both sides and the set
     intersection are recomputed independently by the DuckDB oracle. At
     corpus scale the exact side runs on a SAMPLE; here the full corpus is
@@ -247,7 +232,7 @@ def vec_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("__e", F.lit(1))
     )
     ann = (
-        similarity.lsh_portable_near_dup_pairs(
+        similarity.lsh_near_dup_pairs(
             corpus, _ANN_PLANES, threshold=_ANN_RECALL_T
         )
         .select("id_a", "id_b")

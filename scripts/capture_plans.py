@@ -15,7 +15,8 @@ import argparse
 import sys
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 
 def main() -> None:
@@ -33,7 +34,7 @@ def main() -> None:
         get_spark,
     )
 
-    out_dir = Path("/root/repo/plans") / args.tag
+    out_dir = REPO / "plans" / args.tag
     out_dir.mkdir(parents=True, exist_ok=True)
     spark = get_spark("phsqis-plans")
     reg = registry.queries()

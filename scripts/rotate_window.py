@@ -13,7 +13,7 @@ keyed off "the last TWO on-disk rounds" — a set that SLIDES when the round's
 own CORRECTNESS artifact lands, so a name whose newest row was exactly two
 rounds back (vec_bucketed_near_dup, r10) fell out at judge time.
 
-Round-13 scheme — TIME-INVARIANT by construction. Only 35 of the 211
+Round-13 scheme — TIME-INVARIANT by construction. Only 35 of the 208
 registered queries lack an ORACLE_QUERIES parity pin (each pinned name is
 re-verified against its DuckDB oracle by an in-session parametrized
 test_oracle_parity every pytest run), and 35 < 50, so the window can simply
@@ -21,15 +21,15 @@ carry EVERY unpinned name EVERY round:
 
 1. FRONT (``--front``): queries whose implementation/oracle changed this
    round — they need a fresh driver row regardless of recency.
-2. MUST: every registry name with no parity pin / rows-only disposition,
-   ordered oldest-driver-row-first (never-checked sorts first). Not just
-   the stale ones — ALL of them, so coverage never depends on which
-   CORRECTNESS files happen to be on disk.
+2. MUST: every registry name with no parity pin, ordered
+   oldest-driver-row-first (never-checked sorts first). Not just the stale
+   ones — ALL of them, so coverage never depends on which CORRECTNESS
+   files happen to be on disk.
 3. FILL: remaining slots go to parity-pinned names, oldest-checked-first
    (ties alphabetical), so pinned queries still cycle through real driver
    rows over time.
 
-``--check`` verifies the invariant: registry ⊆ (window ∪ pins ∪ rows-only).
+``--check`` verifies the invariant: registry ⊆ (window ∪ pins).
 No on-disk-round term — the predicate evaluates identically before and after
 any number of CORRECTNESS artifacts land, so the recency guard (whose
 "recent" set only ever GROWS relative to this cover) cannot go red between
@@ -49,11 +49,6 @@ import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
-
-# The three documented partitioner-dependent xxhash64 fast paths the DuckDB
-# oracle cannot replay; permanently pinned OUT of the window (COVERAGE.md,
-# test_rows_only_set_is_exactly_the_documented_three).
-ROWS_ONLY = {"dedup_minhash_lsh", "dedup_simhash", "vec_lsh_near_dup"}
 
 
 def _strings(node) -> list[str]:
@@ -130,7 +125,7 @@ def derive(front: list[str], window: int = 50) -> list[str]:
         (
             n
             for n in names
-            if n not in pinned and n not in ROWS_ONLY and n not in out
+            if n not in pinned and n not in out
         ),
         key=age_key,
     )
@@ -141,19 +136,19 @@ def derive(front: list[str], window: int = 50) -> list[str]:
             "the unpinned set no longer fits in the window — add parity pins "
             "(ORACLE_QUERIES lists), never hand-trim MUST."
         )
-    fill = sorted((n for n in names if n not in out and n not in ROWS_ONLY), key=age_key)
+    fill = sorted((n for n in names if n not in out), key=age_key)
     out += fill[: window - len(out)]
     return out
 
 
 def check(window_names: list[str]) -> list[str]:
-    """Time-invariant cover: registry ⊆ window ∪ pins ∪ rows-only. Holds (or
+    """Time-invariant cover: registry ⊆ window ∪ pins. Holds (or
     fails) identically no matter which CORRECTNESS artifacts are on disk, so
     a green commit cannot turn red when the round's artifact lands. Return
     violations."""
     names = registry_names()
     pinned = parity_pinned()
-    covered = set(window_names) | pinned | ROWS_ONLY
+    covered = set(window_names) | pinned
     return sorted(set(names) - covered)
 
 
@@ -170,7 +165,7 @@ def main() -> None:
 
         bad = check(list(Q._DRIVER_PRIORITY))
         if bad:
-            print(f"NOT COVERED: {len(bad)} names outside window∪pins∪rows-only: {bad}")
+            print(f"NOT COVERED: {len(bad)} names outside window∪pins: {bad}")
             raise SystemExit(1)
         print(f"OK: window of {len(Q._DRIVER_PRIORITY)} covers every unpinned query")
         return

@@ -85,10 +85,10 @@ def test_no_headline_query_has_cartesian(spark, qs):
     # LSH/near-dup queries must candidate-pair via bucket joins, never a
     # cross join of the full table against itself
     for name in [
-        "dedup_minhash_lsh",
+        "dedup_minhash_portable",
         "dedup_ngram_jaccard",
-        "dedup_simhash",
-        "vec_lsh_near_dup",
+        "dedup_simhash_portable",
+        "vec_lsh_portable",
         "vec_bucketed_near_dup",
         "dedup_exact",
         "text_analysis",

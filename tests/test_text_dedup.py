@@ -1,5 +1,5 @@
 """Text-analysis + dedup tests: oracle parity, and property checks for the
-non-SQL-expressible paths (MinHash vs exact Jaccard, SimHash sanity)."""
+approximate paths (MinHash vs exact Jaccard, SimHash vs brute force)."""
 
 from __future__ import annotations
 
@@ -208,8 +208,9 @@ def test_exact_dedup_keeps_canonical(spark, docs):
 
 
 def test_minhash_lsh_recall_vs_exact(spark, docs):
-    """LSH candidates at est-jaccard ≥ 0.5 must recover the exact-jaccard
-    pairs at ≥ 0.5 with high recall and estimate within tolerance."""
+    """LSH candidates (md5-prefix signatures, string band keys) must
+    recover the exact-jaccard pairs at ≥ 0.5 with high recall and estimate
+    within tolerance."""
     exact = {
         (r["id_a"], r["id_b"]): r["jaccard"]
         for r in dedup.jaccard_pairs(docs, n=8, threshold=0.5).collect()
@@ -227,6 +228,22 @@ def test_minhash_lsh_recall_vs_exact(spark, docs):
     for p, j in exact.items():
         if p in approx:
             assert abs(approx[p] - j) <= 0.35, (p, j, approx[p])
+
+
+def test_portable_minhash_recall_vs_exact(spark, docs):
+    """The registry's MinHash query, at the suite's own parameters
+    (n=8, 32 hashes, 8 bands, est-Jaccard ≥ 0.5), recovers the exact-Jaccard
+    pairs at ≥ 0.5 and emits no pair below its threshold."""
+    exact = {
+        (r["id_a"], r["id_b"])
+        for r in dedup.jaccard_pairs(docs, n=8, threshold=0.5).collect()
+    }
+    rows = entrymod.queries()["dedup_minhash_portable"](spark, SF_DIR).collect()
+    approx = {(r["id_a"], r["id_b"]) for r in rows}
+    assert exact
+    found = sum(1 for p in exact if p in approx)
+    assert found / len(exact) >= 0.9, f"{found}/{len(exact)}"
+    assert all(r["est_jaccard"] >= 0.5 for r in rows)
 
 
 @pytest.mark.slow
@@ -249,77 +266,60 @@ def test_simhash_is_deterministic(spark, docs):
     assert a == b
 
 
-def test_simhash_pairs_complete_vs_bruteforce(spark, docs):
-    """Pigeonhole candidate generation must find EVERY pair within the
-    Hamming bound — verified against a brute-force cross of the signatures,
-    for both the plain per-piece join and the multi-piece (Manku) keys."""
+def _simhash_brute(sigs, d):
+    """Every pair of signatures within Hamming distance ``d`` of each other
+    (two-half signature: hamming = popcount(hi⊕hi′) + popcount(lo⊕lo′))."""
     import itertools
 
-    sigs = dedup.simhash(docs.limit(120)).collect()
-    sub = docs.limit(120)
-
-    def brute(d):
-        out = set()
-        for a, b in itertools.combinations(sigs, 2):
-            ham = bin((a["simhash"] ^ b["simhash"]) & (2**64 - 1)).count("1")
-            if ham <= d:
-                key = (min(a["doc_id"], b["doc_id"]), max(a["doc_id"], b["doc_id"]))
-                out.add(key)
-        return out
-
-    for d, agree in ((6, 1), (4, 2)):
-        got = {
-            (r["id_a"], r["id_b"])
-            for r in dedup.simhash_pairs(sub, max_hamming=d, agree_pieces=agree).collect()
-        }
-        assert got == brute(d), f"d={d} agree={agree}"
-
-
-def test_simhash_pairs_rejects_incomplete_split(spark, docs):
-    with pytest.raises(ValueError):
-        dedup.simhash_pairs(docs, max_hamming=12, chunks=4)
-    with pytest.raises(ValueError):
-        dedup.simhash_pairs(docs, max_hamming=8, chunks=10, agree_pieces=3)
-
-
-def test_portable_simhash_pairs_complete_vs_bruteforce(spark, docs):
-    """The nibble-piece candidate join must find every pair within the
-    Hamming bound of the two-half portable signature."""
-    import itertools
-
-    sub = docs.limit(120)
-    sigs = dedup.simhash_portable(sub).collect()
-    d = 8
-    brute = set()
+    out = set()
     for a, b in itertools.combinations(sigs, 2):
         ham = bin(a["sim_hi"] ^ b["sim_hi"]).count("1") + bin(
             a["sim_lo"] ^ b["sim_lo"]
         ).count("1")
         if ham <= d:
-            brute.add((min(a["doc_id"], b["doc_id"]), max(a["doc_id"], b["doc_id"])))
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in dedup.simhash_pairs_portable(sub, max_hamming=d).collect()
-    }
-    assert got == brute
+            out.add((min(a["doc_id"], b["doc_id"]), max(a["doc_id"], b["doc_id"])))
+    return out
 
 
-def test_portable_minhash_recall_vs_exact(spark, docs):
-    """The portable hash family must dedup as well as the xxhash one:
-    recall vs exact Jaccard pairs at the suite's parameters."""
-    exact = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dedup.jaccard_pairs(docs, n=8, threshold=0.5).collect()
-    }
-    approx = {
-        (r["id_a"], r["id_b"])
-        for r in dedup.minhash_lsh_pairs(
-            docs, n=8, num_hashes=32, bands=8, threshold=0.35, portable=True
-        ).collect()
-    }
-    assert exact
-    found = sum(1 for p in exact if p in approx)
-    assert found / len(exact) >= 0.9
+def test_portable_simhash_pairs_complete_vs_bruteforce(spark, docs):
+    """Pigeonhole candidate generation (max_hamming + 1 contiguous pieces of
+    the two-half signature) must find EVERY pair within the Hamming bound —
+    verified against a brute-force cross of the signatures, from a tight
+    bound up to a loose one whose pieces are 3 bits wide."""
+    sub = docs.limit(120)
+    sigs = dedup.simhash(sub).collect()
+    for d in (4, 6, 8, 20):
+        got = {
+            (r["id_a"], r["id_b"])
+            for r in dedup.simhash_pairs(sub, max_hamming=d).collect()
+        }
+        assert got == _simhash_brute(sigs, d), f"d={d}"
+
+
+def test_simhash_pairs_complete_vs_bruteforce(spark, docs):
+    """The two extreme splits stay complete: max_hamming=0 is one 64-bit
+    piece (an exact-signature join, exercised by re-idded copies of ten
+    docs) and max_hamming=63 is 64 one-bit pieces, the widest split the
+    operator accepts."""
+    base = docs.select("doc_id", "text").limit(60)
+    sub = base.unionAll(
+        base.limit(10).select((F.col("doc_id") + 10_000).alias("doc_id"), "text")
+    )
+    sigs = dedup.simhash(sub).collect()
+    for d in (0, 63):
+        got = {
+            (r["id_a"], r["id_b"])
+            for r in dedup.simhash_pairs(sub, max_hamming=d).collect()
+        }
+        assert got == _simhash_brute(sigs, d), f"d={d}"
+    assert len(_simhash_brute(sigs, 0)) >= 10
+
+
+def test_simhash_pairs_rejects_incomplete_split(spark, docs):
+    """A 64-bit signature has at most 64 pieces, so max_hamming ≥ 64 has no
+    complete split and must be rejected, not silently under-joined."""
+    with pytest.raises(ValueError):
+        dedup.simhash_pairs(docs, max_hamming=64)
 
 
 def test_pipeline_clean_corpus_oracle_and_plan(spark):

@@ -161,7 +161,9 @@ def test_lsh_recall_vs_exact_on_perturbed(spark, emb):
     }
     approx = {
         (r["id_a"], r["id_b"])
-        for r in similarity.lsh_near_dup_pairs(corpus, threshold=0.95, nbits=10).collect()
+        for r in similarity.lsh_near_dup_pairs(
+            corpus, similarity.make_planes(10, 64), threshold=0.95
+        ).collect()
     }
     assert len(exact) >= 150, f"expected ~200 planted pairs, got {len(exact)}"
     recall = len(exact & approx) / len(exact)
@@ -238,7 +240,7 @@ def test_recall_leg_pairs_are_distinct(spark):
     exact = similarity.exact_near_dup_pairs_blocked(
         corpus, threshold=V._ANN_RECALL_T, n_rows=n
     )
-    ann = similarity.lsh_portable_near_dup_pairs(
+    ann = similarity.lsh_near_dup_pairs(
         corpus, V._ANN_PLANES, threshold=V._ANN_RECALL_T
     )
     for label, leg in (("exact", exact), ("ann", ann)):
@@ -336,9 +338,16 @@ def test_kmeans_improves_on_init_and_is_deterministic(spark, emb):
 
 
 def test_lsh_signature_deterministic(spark, emb):
-    a = sorted(similarity.lsh_signature(emb.limit(30)).select("vec_id", "bucket").collect())
-    b = sorted(similarity.lsh_signature(emb.limit(30)).select("vec_id", "bucket").collect())
-    assert a == b
+    planes = similarity.make_planes(12, 64)
+
+    def sig():
+        return sorted(
+            similarity.lsh_signature_planes(emb.limit(30), planes)
+            .select("vec_id", "bucket")
+            .collect()
+        )
+
+    assert sig() == sig()
 
 
 def test_cosine_self_is_one(spark, emb):
@@ -358,23 +367,27 @@ def test_topk_rank_is_dense_per_query(spark, emb):
 
 
 def test_choose_nbits_tracks_corpus_size():
-    """Auto nbits keeps expected bucket population ~constant: grows with
-    log2(n), clamped to [6, 24]."""
-    assert similarity.choose_nbits(0) == 6
-    assert similarity.choose_nbits(1_000) == 6          # clamp floor
-    assert similarity.choose_nbits(100_000) == 12       # 100k/32 -> 2^12
-    assert similarity.choose_nbits(10_000_000) == 19
-    assert similarity.choose_nbits(10**12) == 24        # clamp ceiling
+    """The one LSH width rule keeps expected bucket population ~constant:
+    at a 32-vector bucket target it grows with log2(n), clamped to [6, 24]."""
+
+    def choose_nbits(n):
+        return similarity.portable_nbits(n, target_bucket_size=32)
+
+    assert choose_nbits(0) == 6
+    assert choose_nbits(1_000) == 6          # clamp floor
+    assert choose_nbits(100_000) == 12       # 100k/32 -> 2^12
+    assert choose_nbits(10_000_000) == 19
+    assert choose_nbits(10**12) == 24        # clamp ceiling
     for small, big in ((10_000, 1_000_000), (1_000_000, 100_000_000)):
-        assert similarity.choose_nbits(small) < similarity.choose_nbits(big)
+        assert choose_nbits(small) < choose_nbits(big)
     # expected bucket population within 2x of target at an unclamped point
     n = 2_000_000
-    nb = similarity.choose_nbits(n)
+    nb = choose_nbits(n)
     assert n / 2**nb <= 32 <= 2 * (n / 2**nb) + 32
 
 
 def test_portable_nbits_matches_sql_mirror():
-    """The portable LSH width (r09 scale fix) must be CROSS-ENGINE EXACT:
+    """The LSH width (r09 scale fix) must be CROSS-ENGINE EXACT:
     the integer-arithmetic Python form and the generated DuckDB form
     (``nbits_sql``) agree at every count, including exact powers of two
     where a float log2 could flip the last ulp."""
@@ -388,16 +401,17 @@ def test_portable_nbits_matches_sql_mirror():
         assert similarity.portable_nbits(n) == got, n
     # clamp floor / ceiling and monotonicity
     assert similarity.portable_nbits(0) == 6
-    assert similarity.portable_nbits(10**12) == 16
+    assert similarity.portable_nbits(10**12) == 24
     assert similarity.portable_nbits(1_000) == 8  # sf0.01 corpus: unchanged vs r09
-    for small, big in ((1_000, 40_000), (40_000, 200_000)):
+    assert similarity.portable_nbits(10**7) == 22  # above the former 16-bit cap
+    for small, big in ((1_000, 40_000), (40_000, 200_000), (10**6, 10**8)):
         assert similarity.portable_nbits(small) < similarity.portable_nbits(big)
 
 
 def test_make_planes_prefix_stable():
     """One max-width literal plane table serves every adaptive width:
     row p depends only on (seed, p, i), never on nbits."""
-    assert similarity.make_planes(16, 64, 42)[:8] == similarity.make_planes(8, 64, 42)
+    assert similarity.make_planes(24, 64, 42)[:8] == similarity.make_planes(8, 64, 42)
 
 
 def test_adaptive_oracle_rejects_short_plane_table():
@@ -413,23 +427,24 @@ def test_adaptive_oracle_rejects_short_plane_table():
 
 def test_bucketed_gemm_equals_lsh_path(spark, emb):
     """bucketed_near_dup_pairs must return the IDENTICAL pair set (and
-    round-9 sims) as lsh_near_dup_pairs at equal nbits — same candidates,
-    GEMM re-rank instead of per-pair folds — and stay a subset of the
-    exact pairs. (The two paths default to different bucket-size targets,
-    so the shared target is explicit here.)"""
+    round-9 sims) as lsh_near_dup_pairs over the same planes — same
+    candidates, GEMM re-rank instead of per-pair folds — and stay a subset
+    of the exact pairs."""
     for limit in (100, 200):
         corpus = _perturbed_corpus(spark, emb.limit(limit))
-        n = 2 * limit
+        planes = similarity.make_planes(
+            similarity.portable_nbits(2 * limit, target_bucket_size=16), 64
+        )
         lsh = {
             (r["id_a"], r["id_b"], r["sim"])
             for r in similarity.lsh_near_dup_pairs(
-                corpus, threshold=0.95, nbits=None, n_rows=n, target_bucket_size=16
+                corpus, planes, threshold=0.95
             ).collect()
         }
         bucketed = {
             (r["id_a"], r["id_b"], r["sim"])
             for r in similarity.bucketed_near_dup_pairs(
-                corpus, threshold=0.95, nbits=None, n_rows=n, target_bucket_size=16
+                corpus, planes, threshold=0.95
             ).collect()
         }
         assert bucketed == lsh, f"limit={limit}"
@@ -446,16 +461,17 @@ def test_bucketed_gemm_equals_lsh_path(spark, emb):
 def test_bucketed_gemm_sub_blocks_invariant(spark, emb):
     """The sub-block straggler guard must not change the result."""
     corpus = _perturbed_corpus(spark, emb.limit(80))
+    planes = similarity.make_planes(6, 64)
     base = {
         tuple(r)
         for r in similarity.bucketed_near_dup_pairs(
-            corpus, threshold=0.95, nbits=6, sub_blocks=1
+            corpus, planes, threshold=0.95, sub_blocks=1
         ).collect()
     }
     split = {
         tuple(r)
         for r in similarity.bucketed_near_dup_pairs(
-            corpus, threshold=0.95, nbits=6, sub_blocks=3
+            corpus, planes, threshold=0.95, sub_blocks=3
         ).collect()
     }
     assert base == split and len(base) >= 40
@@ -576,7 +592,9 @@ def test_zero_norm_vectors_never_raise(spark):
         qs, df, k=2, query_id="q_id", query_vec="q_emb"
     ).collect()
     assert len(topk) == 2 and all(r["sim"] is None for r in topk)
-    lsh = similarity.lsh_near_dup_pairs(df, threshold=0.5, nbits=4).collect()
+    lsh = similarity.lsh_near_dup_pairs(
+        df, similarity.make_planes(4, 2), threshold=0.5
+    ).collect()
     assert {(r["id_a"], r["id_b"]) for r in lsh} <= {(0, 2)}
 
 
