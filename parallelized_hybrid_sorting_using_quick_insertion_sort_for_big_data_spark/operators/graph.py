@@ -500,42 +500,37 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 4) -> DataFrame:
     at scale you run until a cheap O(1)-row fixed-point check passes,
     same device as connected components' convergence checksum).
 
-    At 100 TB: per round one degree aggregation plus two node-keyed
-    semi-joins — fixed-width bigint relations, monotonically shrinking;
-    lineage cut per round (pagerank device).
-
-    r14 (guide §5): every per-round checkpoint is LAZY. The cut still
-    happens at build time (the returned frame scans a checkpoint RDD, so
-    plan depth stays constant in ``rounds``), but materialization moves
-    into the caller's action instead of one driver-blocking job per peel.
-    Each round's ``live`` has two consumers (degree agg + semi-join); the
-    checkpoint RDD's cache dedups their compute after the first partition
-    materializes, and a concurrent-stage overlap can at worst re-run one
-    round's reduce-side work — bounded, and strictly cheaper than the
-    per-round blocking job it replaces."""
+    Shape: one shuffle per round (a Pregel superstep). The state is the
+    directed edge rows ``(src, dst, d)`` with ``d = deg(src)``, set once by
+    a window count over ``src``. A round takes one window over ``dst``:
+    ``dv = count(*)`` is dst's current degree (the graph is symmetric) and
+    ``nv = count(d >= k)`` its degree after the peel. Rows with
+    ``d >= k AND dv >= k`` survive and are emitted reversed as
+    ``(dst, src, nv)``, so the next round's state again carries its src's
+    degree. At 100 TB each round re-shuffles the 2|E| fixed-width edge rows
+    once, and no row ever holds a neighbour list (a hub's window group
+    spills instead of building one huge row). A lazy ``localCheckpoint``
+    per round keeps plan depth constant in ``rounds`` without a blocking
+    job per round."""
     if k < 1 or rounds < 1:
         raise ValueError(f"k >= 1 and rounds >= 1 required, got k={k}, rounds={rounds}")
     live = edges.select(
         F.col("src").cast("bigint").alias("src"), F.col("dst").cast("bigint").alias("dst")
-    ).localCheckpoint(eager=False)
+    ).withColumn("d", F.count(F.lit(1)).over(Window.partitionBy("src")))
+    by_dst = Window.partitionBy("dst")
     for _ in range(rounds):
-        # NOTE (r14, measured negative): an explicit repartition("src")
-        # shared by the degree agg and the src-side semi-join was tried to
-        # merge their exchanges — but AQE broadcasts `keep` at small keep
-        # sizes, which makes the join side exchange-free, and the explicit
-        # repartition then becomes a pure extra shuffle AQE cannot remove
-        # (final plans: 2 BHJ + 1 extra Exchange). The un-hinted shape
-        # lets AQE pick broadcast (small keep) or SMJ (node-scale keep).
-        keep = (
-            live.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("__d"))
-            .where(F.col("__d") >= k)
-            .select(F.col("src").alias("node"))
-        )
         live = (
-            live.join(keep.withColumnRenamed("node", "src"), "src", "left_semi")
-            .join(keep.withColumnRenamed("node", "dst"), "dst", "left_semi")
-            .select("src", "dst")
+            live.select(
+                "src",
+                "dst",
+                "d",
+                F.count(F.lit(1)).over(by_dst).alias("__dv"),
+                F.count(F.when(F.col("d") >= k, 1)).over(by_dst).alias("__nv"),
+            )
+            .where((F.col("d") >= k) & (F.col("__dv") >= k))
+            .select(
+                F.col("dst").alias("src"), F.col("src").alias("dst"), F.col("__nv").alias("d")
+            )
             .localCheckpoint(eager=False)
         )
     return live.groupBy(F.col("src").alias("node")).agg(

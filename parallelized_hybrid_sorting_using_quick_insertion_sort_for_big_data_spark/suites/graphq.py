@@ -98,12 +98,14 @@ _LPA_ORACLE = graph.lpa_oracle_sql(_EDGES_CTE, iters=_LPA_ITERS)
 # co-purchase projection (the trade graph is bipartite, hence triangle-free
 # by construction): parts are linked when they appear together in ≥2 ORDERS.
 # Order-level baskets, not customer-level: an order holds ≤ a handful of
-# lines, so the pair join emits ~6 pairs per order instead of the ~800 per
-# customer basket (measured 11× cheaper at sf0.1 for a graph of the same
-# order of magnitude), and "bought in the same order" is the standard
-# market-basket granularity anyway. Hot baskets >256 items are dropped
-# before the pair join (the DIMSUM cap — a no-op on TPC-H order shapes,
-# the guard a 100 TB bot-order needs), mirrored in the oracle.
+# lines, so each basket emits ~6 pairs instead of the ~800 per customer
+# basket (measured 11× cheaper at sf0.1 for a graph of the same order of
+# magnitude), and "bought in the same order" is the standard market-basket
+# granularity anyway. Spark builds each order's part set with one group-by
+# and explodes the pairs inside the set's row; the oracle spells the same
+# set as DISTINCT + window count + self-join. Hot baskets >256 distinct
+# items are dropped before pairing (the DIMSUM cap — a no-op on TPC-H
+# order shapes, the guard a 100 TB bot-order needs).
 # ---------------------------------------------------------------------------
 
 _COPURCHASE_EDGES_CTE = """basket0 AS (
@@ -127,27 +129,24 @@ _TRIANGLE_ORACLE = graph.triangle_oracle_sql(_COPURCHASE_EDGES_CTE)
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical (a < b) part-part co-purchase edges: parts sharing ≥2
     orders, basket cap 256 — the undirected projection the triangle /
-    k-core / Adamic-Adar queries run on. One fact-sized distinct + one
-    basket-keyed pair join (bounded per-order fan-out), then grouped
-    counts: the DIMSUM shape, no cross join anywhere."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.select(
-        F.col("l_orderkey").alias("bid"), F.col("l_partkey").alias("part")
-    ).distinct()
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("bid")
-    capped = (
-        baskets.withColumn("__bk", F.count(F.lit(1)).over(w))
-        .where(F.col("__bk") <= 256)
-        .drop("__bk")
+    k-core / Adamic-Adar queries run on. One basket group-by (the set of
+    distinct parts per order), each capped set exploded into its a < b
+    pairs in place (bounded per-order fan-out), then one grouped count:
+    two shuffles, no sort, no cross join — the DIMSUM shape."""
+    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_orderkey").isNotNull())
+    baskets = li.groupBy(F.col("l_orderkey").alias("bid")).agg(
+        F.collect_set("l_partkey").alias("parts"),
+        # the oracle's cap counts a NULL part as one more distinct row
+        F.max(F.col("l_partkey").isNull().cast("int")).alias("__null"),
     )
-    a = capped.select(F.col("bid").alias("__e"), F.col("part").alias("a"))
-    b = capped.select(F.col("bid").alias("__e"), F.col("part").alias("b"))
-    return (
-        a.join(b, "__e")
+    pairs = (
+        baskets.where(F.size("parts") + F.col("__null") <= 256)
+        .select(F.explode("parts").alias("a"), "parts")
+        .select("a", F.explode("parts").alias("b"))
         .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
+    )
+    return (
+        pairs.groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("__n"))
         .where(F.col("__n") >= 2)
         .select("a", "b")
@@ -224,15 +223,17 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     true 2-core at every tested scale — convergence pytest-pinned): the
     density filter that strips hairs and chains off a graph before
     community/centrality work, and the classic "engaged subgraph" cut.
-    Per round: one degree agg + two semi-joins over shrinking bigint
-    relations, every peel value-checked by the generated unrolled oracle."""
-    # pin the projection before symmetrizing: the union references it twice
-    # and kcore's own entry checkpoint would otherwise evaluate the basket
-    # pair join twice
-    canon = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
-    sym = canon.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
-        canon.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
+    Per round: one shuffle of the shrinking degree-carrying edge rows,
+    every peel value-checked by the generated unrolled oracle."""
+    canon = _copurchase_edges(spark, sf_dir)
+    sym = canon.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
+                F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
+            )
+        ).alias("e")
+    ).select("e.src", "e.dst")
     return graph.kcore(sym, k=_KCORE_K, rounds=_KCORE_ROUNDS)
 
 

@@ -1596,7 +1596,8 @@ def pipeline_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         "total_chars",
         "median_tokens",
         "dup_docs",
-        F.round(F.col("dup_docs").cast("double") / F.col("n_docs"), 9).alias(
+        # NULL on an empty corpus, like the oracle's 0.0/0
+        F.round(F.try_divide(F.col("dup_docs").cast("double"), F.col("n_docs")), 9).alias(
             "dup_rate"
         ),
     )

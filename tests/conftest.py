@@ -16,6 +16,20 @@ SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_MID = "/root/testdata/sf0.01"
 
 
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """pytest.ini deselects ``slow`` tests by default; say so, with the
+    command that runs them, instead of letting them vanish silently."""
+    n = sum(
+        1
+        for item in terminalreporter.stats.get("deselected", [])
+        if item.get_closest_marker("slow")
+    )
+    if n and "slow" in config.getoption("markexpr"):
+        terminalreporter.write_line(
+            f'{n} slow tests deselected; run them with: python -m pytest tests/ -m "" -q'
+        )
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_spark("phsqis-tests")

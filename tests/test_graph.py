@@ -5,6 +5,7 @@ lineage flatness at high iteration counts, and edge cases."""
 from __future__ import annotations
 
 import random
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -340,6 +341,172 @@ def test_kcore_converged_at_testdata_rounds(spark):
             ).collect()
         }
         assert at_n == at_n1 and at_n, sf
+
+
+def _peel_reference(sym, k, rounds):
+    """Pure-Python copy of the unrolled oracle: per round keep the nodes of
+    (multi-)degree >= k, then the edges with both ends kept; return
+    {node: degree} of what is left after exactly ``rounds`` peels."""
+    e = list(sym)
+    for _ in range(rounds):
+        deg = Counter(s for s, _ in e)
+        keep = {v for v, c in deg.items() if c >= k}
+        e = [(s, d) for s, d in e if s in keep and d in keep]
+    return dict(Counter(s for s, _ in e))
+
+
+def _peel_depth(sym, k):
+    r = 0
+    while _peel_reference(sym, k, r) != _peel_reference(sym, k, r + 1):
+        r += 1
+    return r
+
+
+def _random_sym_graph(seed, offset):
+    """<= 30 nodes: a random sparse core plus a pendant chain, so the peel
+    takes several rounds; symmetric, no self loops, ids shifted by offset."""
+    rng = random.Random(seed)
+    n = rng.randint(8, 22)
+    canon = {
+        tuple(sorted(rng.sample(range(n), 2))) for _ in range(rng.randint(n, 2 * n))
+    }
+    tail = rng.randint(1, 30 - n)
+    canon |= {(n - 1 + i, n + i) for i in range(tail)}
+    return [(offset + a, offset + b) for a, b in canon] + [
+        (offset + b, offset + a) for a, b in canon
+    ]
+
+
+def _kcore_sweep(spark, seeds):
+    # disjoint graphs peel independently, so one union frame checks them
+    # all per (k, rounds) call
+    sym = [e for i, s in enumerate(seeds) for e in _random_sym_graph(s, 100 * i)]
+    df = _edges_df(spark, sym).localCheckpoint(eager=True)
+    for k in (1, 2, 3):
+        depths = [
+            _peel_depth(_random_sym_graph(s, 100 * i), k) for i, s in enumerate(seeds)
+        ]
+        for rounds in sorted({1, 2, max(depths) + 1}):
+            got = {r["node"]: r["degree"] for r in graph.kcore(df, k, rounds).collect()}
+            assert got == _peel_reference(sym, k, rounds), (k, rounds, depths)
+        if k > 1:
+            # some graph is still mid-peel at rounds=1 (a partial peel is
+            # checked against the oracle's rounds, not the true core)
+            assert max(depths) > 1, depths
+
+
+def test_kcore_matches_bruteforce_peel(spark):
+    _kcore_sweep(spark, range(8))
+
+
+@pytest.mark.slow
+def test_kcore_matches_bruteforce_peel_wide(spark):
+    _kcore_sweep(spark, range(100, 140))
+
+
+def test_kcore_degenerate_graphs(spark):
+    empty = graph.kcore(spark.createDataFrame([], EDGE_SCHEMA), k=2, rounds=3)
+    assert empty.collect() == []
+    assert [(f.name, f.dataType) for f in empty.schema.fields] == [
+        ("node", LongType()),
+        ("degree", LongType()),
+    ]
+    single = [(1, 2), (2, 1)]
+    multi = [(1, 2), (2, 3), (2, 1), (3, 2)] * 2  # every edge twice: deg 2, 4, 2
+    star = [(0, i) for i in range(1, 4)] + [(i, 0) for i in range(1, 4)]
+    chain = [(i, i + 1) for i in range(11)]
+    chain = chain + [(b, a) for a, b in chain]
+    cases = [
+        (single, 1, 2, {1: 1, 2: 1}),
+        (single, 2, 1, {}),
+        (multi, 2, 3, {1: 2, 2: 4, 3: 2}),
+        (multi, 3, 1, {}),
+        # hub degree == k survives round 1's threshold, but every leaf is
+        # peeled with it in the same round, so nothing is left
+        (star, 3, 1, {}),
+        (star, 1, 2, {0: 3, 1: 1, 2: 1, 3: 1}),
+        # three peels take 3 nodes off each end of the 12-node chain: a
+        # partial peel, not the (empty) true 2-core
+        (chain, 2, 3, {3: 1, 4: 2, 5: 2, 6: 2, 7: 2, 8: 1}),
+    ]
+    for sym, k, rounds, want in cases:
+        got = {
+            r["node"]: r["degree"]
+            for r in graph.kcore(_edges_df(spark, sym), k, rounds).collect()
+        }
+        assert got == want == _peel_reference(sym, k, rounds), (sym, k, rounds)
+
+
+def test_kcore_one_job_per_round(spark):
+    """One more peel round costs at most one more Spark job on the sf0.001
+    co-purchase graph: each round is a single shuffle."""
+    from parallelized_hybrid_sorting_using_quick_insertion_sort_for_big_data_spark.suites import (
+        graphq,
+    )
+    from tests.conftest import SF_DIR
+
+    sym = (
+        graphq._copurchase_edges(spark, SF_DIR)
+        .selectExpr(
+            "explode(array(named_struct('src', a, 'dst', b),"
+            " named_struct('src', b, 'dst', a))) AS e"
+        )
+        .select("e.src", "e.dst")
+        .localCheckpoint(eager=True)
+    )
+    sc = spark.sparkContext
+
+    def jobs(rounds):
+        group = f"kcore-jobs-{rounds}"
+        sc.setJobGroup(group, group)
+        try:
+            graph.kcore(sym, k=2, rounds=rounds).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    at_r, at_r1 = jobs(3), jobs(4)
+    assert abs(at_r1 - at_r) <= 1, (at_r, at_r1)
+
+
+def test_copurchase_edges_null_keys_match_oracle_cte(spark, tmp_path):
+    """The basket group-by reproduces the oracle's DISTINCT + window-count +
+    self-join edge set when keys are NULL: a NULL order never pairs, and a
+    NULL part counts toward the 256 cap without pairing."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parallelized_hybrid_sorting_using_quick_insertion_sort_for_big_data_spark.suites import (
+        graphq,
+    )
+
+    rows = (
+        [(1, p) for p in range(1, 257)]
+        + [(1, None)]  # 257 distinct incl. NULL: over the cap, no pairs
+        + [(2, 1), (2, 2), (2, 3)]
+        + [(3, 1), (3, 1), (3, 2)]
+        + [(None, 2), (None, 3)]  # never a basket
+    )
+    path = tmp_path / "lineitem.parquet"
+    pq.write_table(
+        pa.table(
+            {
+                "l_orderkey": pa.array([o for o, _ in rows], pa.int64()),
+                "l_partkey": pa.array([p for _, p in rows], pa.int64()),
+            }
+        ),
+        path,
+    )
+    got = {tuple(r) for r in graphq._copurchase_edges(spark, str(tmp_path)).collect()}
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{path}'")
+    want = set(
+        con.execute(f"WITH {graphq._COPURCHASE_EDGES_CTE} SELECT a, b FROM edges").fetchall()
+    )
+    assert got == want == {(1, 2)}
 
 
 def test_kcore_parity_vs_oracle(spark):

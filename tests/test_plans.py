@@ -794,8 +794,8 @@ def test_fertility_two_aggregations_no_cartesian(spark, qs):
     assert not PI.has_cartesian(df), PI.formatted_plan(df)
 
 
-def test_kcore_semi_joins_no_cartesian(spark, qs):
-    """Every peel round is one degree agg + two LeftSemi joins — no
+def test_kcore_no_cartesian(spark, qs):
+    """Every peel round is one window over the edge rows — no
     cartesian/nested loop; the plan is checkpoint-rooted so depth stays
     constant in the round count."""
     df = qs["graph_kcore"](spark, SF_DIR)

@@ -191,6 +191,28 @@ def test_oracle_parity(spark, name):
     assert_matches_oracle(qs[name](spark, SF_DIR), oracles[name], SF_DIR)
 
 
+def test_dataset_card_empty_corpus_matches_oracle(spark, tmp_path):
+    """A zero-row ``documents`` (same schema) gives one card row with a NULL
+    ``dup_rate`` on both engines instead of a DIVIDE_BY_ZERO."""
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    for f in Path(SF_DIR).glob("*.parquet"):
+        if f.name != "documents.parquet":
+            (tmp_path / f.name).symlink_to(f)
+    docs = pq.read_table(f"{SF_DIR}/documents.parquet")
+    pq.write_table(docs.slice(0, 0), tmp_path / "documents.parquet")
+    sf = str(tmp_path)
+    got = entrymod.queries()["pipeline_dataset_card"](spark, sf).collect()
+    assert len(got) == 1 and got[0]["n_docs"] == 0 and got[0]["dup_rate"] is None
+    assert_matches_oracle(
+        entrymod.queries()["pipeline_dataset_card"](spark, sf),
+        entrymod.oracle_sql()["pipeline_dataset_card"],
+        sf,
+    )
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet")
